@@ -29,7 +29,6 @@ Package map (SURVEY.md §7.1):
     checkpoint.py   per-stage checkpoint/resume + metrics tables
     analysis.py     text analysis: lang-id, quality, tokens, fingerprints
     simsearch.py    embedding similarity search (brute-force + LSH buckets)
-    multimodal.py   binary media columns + REAL PNG/WAV codecs (stdlib+numpy)
 """
 
 __version__ = "0.1.0"

@@ -63,10 +63,6 @@ list_aggregate(
 """.strip()
 
 
-def natural_sorted(df: DataFrame, col_name: str) -> DataFrame:
-    return df.orderBy(natural_key(F.col(col_name)), F.col(col_name))
-
-
 def list_plan(
     docs: DataFrame, by: str = "size", rev: bool = False
 ) -> DataFrame:
@@ -104,10 +100,4 @@ def dir_totals(docs: DataFrame) -> DataFrame:
             F.sum("size").alias("total_size"),
             F.count(F.lit(1)).alias("n_files"),
         )
-    )
-
-
-def grand_total(docs: DataFrame) -> DataFrame:
-    return docs.agg(
-        F.sum("size").alias("total_size"), F.count(F.lit(1)).alias("n_files")
     )

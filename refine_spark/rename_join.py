@@ -213,28 +213,6 @@ def join_plan(
     )
 
 
-def rename_receipt(plan: DataFrame) -> DataFrame:
-    """A12 rename summary: total / changes / clashes / blocked, one row
-    (reference rename.rs:151-158)."""
-    return plan.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.sum(F.col("changed").cast("int")).alias("changes"),
-        F.sum((F.col("clash") & F.col("changed")).cast("int")).alias("clashes"),
-        F.sum(F.col("blocked").cast("int")).alias("blocked"),
-    )
-
-
-def rebuild_receipt(plan: DataFrame) -> DataFrame:
-    """A12 rebuild summary: total files / unique names / changes / blocked
-    (reference rebuild.rs:183-191)."""
-    return plan.agg(
-        F.count(F.lit(1)).alias("total"),
-        F.count_distinct("group_name").alias("unique_names"),
-        F.sum(F.col("changed").cast("int")).alias("changes"),
-        F.sum(F.col("blocked").cast("int")).alias("blocked"),
-    )
-
-
 def join_receipt(plan: DataFrame) -> DataFrame:
     """A12 summary receipt: totals / clashes / in_place as one row.
 

@@ -1,4 +1,4 @@
-"""Source load + derived identity columns + fetch filters + filename grammar.
+"""Derived identity columns + fetch filters + filename grammar.
 
 Covers SURVEY.md §2.1 S1-S5 and §2.2 P1-P3, P7-P9 re-expressed over a
 document table: the reference's filesystem traversal becomes a parquet/
@@ -16,19 +16,7 @@ Reference cites:
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession, functions as F
-
-# --- loading -----------------------------------------------------------------
-
-TPCH_TABLES = (
-    "region nation customer supplier part orders lineitem events "
-    "documents embeddings"
-).split()
-
-
-def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
-
+from pyspark.sql import Column, DataFrame, functions as F
 
 # --- derived identity columns (S1/S3 + P3) -----------------------------------
 

@@ -256,15 +256,3 @@ def to_spark(spark, n_docs: int = 1000, cfg: DedupConfig = DEFAULT):
     docs_df = spark.createDataFrame(docs, schema=schema.DOCUMENTS)
     truth_df = spark.createDataFrame(truth, schema=schema.EXPECTED_CLUSTERS)
     return docs_df, truth_df
-
-
-def planted_pairs(truth: pd.DataFrame) -> set[tuple[str, str]]:
-    """All unordered url pairs planted in the same (non-sequential) cluster."""
-    pairs: set[tuple[str, str]] = set()
-    grouped = truth.dropna(subset=["cluster_id"]).groupby("cluster_id")["url"]
-    for _, urls in grouped:
-        us = sorted(urls)
-        for i in range(len(us)):
-            for j in range(i + 1, len(us)):
-                pairs.add((us[i], us[j]))
-    return pairs

@@ -2,17 +2,22 @@
 entry on Spark and its oracle_sql() on DuckDB over the same parquet dir,
 compare row count, column names, and an order-insensitive value hash.
 
-Usage: PYTHONPATH=/root/repo python scripts/check_oracle.py [sf_dir]
+Each ok/FAIL line carries the query's Spark wall time (build + collect).
+
+Usage: python scripts/check_oracle.py [sf_dir] [--only=a,b]
 """
 
 from __future__ import annotations
 
 import math
+import os
 import sys
+import time
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 import __spark_entry__ as entrymod  # noqa: E402
 from refine_spark.session import get_spark  # noqa: E402
@@ -53,16 +58,18 @@ def main(sf_dir: str, only: set[str] | None = None) -> int:
             return 1
     failures = []
     for name, fn in queries.items():
+        t0 = time.monotonic()
         try:
             sdf = fn(spark, sf_dir)
             scols = sdf.columns
             srows = [tuple(r) for r in sdf.collect()]
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"SPARK ERROR: {e}"))
-            print(f"FAIL  {name}: spark error {str(e)[:160]}")
+            print(f"FAIL  {name}: spark error {str(e)[:160]} ({time.monotonic() - t0:.2f} s)")
             continue
+        took = f"({time.monotonic() - t0:.2f} s)"
         if name not in oracles:
-            print(f"rows  {name}: {len(srows)} rows (rows-only, no oracle)")
+            print(f"rows  {name}: {len(srows)} rows (rows-only, no oracle) {took}")
             continue
         try:
             res = con.execute(oracles[name])
@@ -70,23 +77,23 @@ def main(sf_dir: str, only: set[str] | None = None) -> int:
             orows = res.fetchall()
         except Exception as e:  # noqa: BLE001
             failures.append((name, f"DUCKDB ERROR: {e}"))
-            print(f"FAIL  {name}: duckdb error {str(e)[:160]}")
+            print(f"FAIL  {name}: duckdb error {str(e)[:160]} {took}")
             continue
         if sorted(scols) != sorted(ocols):
             failures.append((name, f"schema {sorted(scols)} != {sorted(ocols)}"))
-            print(f"FAIL  {name}: schema mismatch {sorted(scols)} vs {sorted(ocols)}")
+            print(f"FAIL  {name}: schema mismatch {sorted(scols)} vs {sorted(ocols)} {took}")
             continue
         if len(srows) != len(orows):
             failures.append((name, f"rows {len(srows)} != {len(orows)}"))
-            print(f"FAIL  {name}: rowcount {len(srows)} vs {len(orows)}")
+            print(f"FAIL  {name}: rowcount {len(srows)} vs {len(orows)} {took}")
             continue
         if rowset(scols, srows) != rowset(ocols, orows):
             sset, oset = rowset(scols, srows), rowset(ocols, orows)
             diff = [(a, b) for a, b in zip(sset, oset) if a != b][:3]
             failures.append((name, f"values differ, e.g. {diff}"))
-            print(f"FAIL  {name}: value mismatch e.g. {diff}")
+            print(f"FAIL  {name}: value mismatch e.g. {diff} {took}")
             continue
-        print(f"ok    {name}: {len(srows)} rows match")
+        print(f"ok    {name}: {len(srows)} rows match {took}")
 
     print(f"\n{len(queries) - len(failures)}/{len(queries)} ok; {len(failures)} failures")
     spark.stop()

@@ -1,4 +1,4 @@
-"""Apply-layer + incremental streaming dedup tests."""
+"""Apply-layer tests: rename plans, atomic overwrite, quarantine, probe backoff."""
 
 from __future__ import annotations
 
@@ -6,9 +6,7 @@ import os
 
 from pyspark.sql import functions as F
 
-from refine_spark import synth
 from refine_spark.apply import apply_rename_plan, atomic_overwrite, quarantine_split
-from refine_spark.streaming import run_incremental_dedup
 
 
 def test_apply_rename_plan(spark):
@@ -45,66 +43,6 @@ def test_atomic_overwrite_and_quarantine(spark, tmp_path):
     )
     assert ok.count() == 7 and bad.count() == 2
     assert spark.read.parquet(str(tmp_path / "quar")).count() == 2
-
-
-def test_incremental_dedup_two_batches(spark, tmp_path):
-    docs, _ = synth.gen_documents(120)
-    half = len(docs) // 2
-    in_dir = str(tmp_path / "in")
-    state = str(tmp_path / "state")
-    os.makedirs(in_dir)
-
-    from refine_spark import schema
-
-    first = spark.createDataFrame(docs.iloc[:half], schema=schema.DOCUMENTS)
-    first.write.mode("overwrite").parquet(os.path.join(in_dir, "batch1"))
-
-    q = run_incremental_dedup(spark, in_dir + "/*", state)
-    q.awaitTermination(300)
-
-    # second batch re-sends some earlier docs (same url space new urls? use
-    # exact text copies) -> they must match existing reps, not create new
-    dup_batch = docs.iloc[:20].copy()
-    dup_batch["url"] = dup_batch["url"] + "?repost=1"
-    second = spark.createDataFrame(dup_batch, schema=schema.DOCUMENTS)
-    second.write.mode("append").parquet(os.path.join(in_dir, "batch2"))
-
-    q2 = run_incremental_dedup(spark, in_dir + "/*", state)
-    q2.awaitTermination(300)
-
-    assigns = spark.read.parquet(os.path.join(state, "assignments"))
-    reposts = assigns.filter(F.col("url").contains("repost=1"))
-    n_matched = reposts.filter(F.col("rep").isNotNull()).count()
-    assert reposts.count() == 20
-    assert n_matched == 20, f"only {n_matched}/20 reposted docs matched the index"
-
-    # scale contract: batch N's index write is O(batch), not O(corpus) —
-    # batch-1 parquet files must survive batch 2 untouched (append, no
-    # rewrite), and no key may be duplicated by the appends
-    def _pq_files(root):
-        return {
-            os.path.relpath(os.path.join(dp, f), root)
-            for dp, _, fs in os.walk(root)
-            for f in fs
-            if f.endswith(".parquet")
-        }
-
-    exact_files = _pq_files(os.path.join(state, "exact"))
-    assert exact_files, "bucketed index must contain parquet files"
-    third = docs.iloc[:10].copy()
-    third["url"] = third["url"] + "?repost=2"
-    extra = docs.iloc[half:].copy()  # genuinely novel docs
-    batch3 = spark.createDataFrame(
-        __import__("pandas").concat([third, extra]), schema=schema.DOCUMENTS
-    )
-    batch3.write.mode("append").parquet(os.path.join(in_dir, "batch3"))
-    q3 = run_incremental_dedup(spark, in_dir + "/*", state)
-    q3.awaitTermination(300)
-
-    exact_files_after = _pq_files(os.path.join(state, "exact"))
-    assert exact_files <= exact_files_after, "append must not rewrite old files"
-    idx = spark.read.parquet(os.path.join(state, "exact"))
-    assert idx.count() == idx.select("sample_key").distinct().count()
 
 
 def test_empty_parents(spark):
@@ -157,138 +95,3 @@ def test_probe_backoff_schedule(spark):
         raise OSError("transport")
 
     assert probe_one("x", boom, retries=0, sleeper=w2.append) == "failed"
-
-
-def test_partition_scoped_compaction(spark, tmp_path):
-    """Compaction write volume is O(dirty buckets), not O(corpus): only
-    bucket dirs over the small-file threshold are rewritten (to one
-    file); clean buckets keep their exact files; rows and keys survive
-    unchanged; scratch dirs don't leak into partition discovery."""
-    import pandas as pd
-
-    from refine_spark.streaming import _bucketed, compact_index
-
-    path = str(tmp_path / "idx")
-
-    def broad(i):
-        return pd.DataFrame(
-            {
-                "sample_key": [f"k{i}_{j}" for j in range(40)],
-                "rep": [f"u{i}_{j}" for j in range(40)],
-            }
-        )
-
-    for i in range(2):  # 2 broad appends -> every touched bucket has <=2 files
-        _bucketed(spark.createDataFrame(broad(i)), ["sample_key"]).coalesce(
-            1
-        ).write.mode("append").partitionBy("bucket").parquet(path)
-
-    # find 4 distinct keys that hash to ONE bucket, append them one by one
-    # -> exactly that bucket crosses the 4-file threshold
-    cand = pd.DataFrame(
-        {"sample_key": [f"hot{j}" for j in range(64)], "rep": "r"}
-    )
-    keyed = _bucketed(spark.createDataFrame(cand), ["sample_key"]).collect()
-    by_bucket = {}
-    for r in keyed:
-        by_bucket.setdefault(r["bucket"], []).append(r["sample_key"])
-    hot_bucket, hot_keys = next(
-        (b, ks) for b, ks in by_bucket.items() if len(ks) >= 4
-    )
-    for k in hot_keys[:4]:
-        one = pd.DataFrame({"sample_key": [k], "rep": ["r"]})
-        _bucketed(spark.createDataFrame(one), ["sample_key"]).coalesce(
-            1
-        ).write.mode("append").partitionBy("bucket").parquet(path)
-
-    def counts():
-        return {
-            int(d.split("=")[1]): sorted(
-                f
-                for f in os.listdir(os.path.join(path, d))
-                if f.endswith(".parquet")
-            )
-            for d in os.listdir(path)
-            if d.startswith("bucket=")
-        }
-
-    before = counts()
-    dirty = {b for b, fs in before.items() if len(fs) > 4}
-    clean = {b for b, fs in before.items() if len(fs) <= 4}
-    assert dirty == {hot_bucket} and clean
-    rows_before = spark.read.parquet(path).count()
-    keys_before = {
-        r["sample_key"] for r in spark.read.parquet(path).collect()
-    }
-
-    compacted = compact_index(spark, path, max_files_per_bucket=4)
-    assert sorted(compacted) == sorted(dirty)
-
-    after = counts()
-    assert len(after[hot_bucket]) == 1  # dirty bucket -> one file
-    for b in clean:  # clean buckets byte-untouched (same file names)
-        assert after[b] == before[b]
-    # table reads stay intact: same rows, same keys, no scratch partitions
-    assert spark.read.parquet(path).count() == rows_before
-    assert {
-        r["sample_key"] for r in spark.read.parquet(path).collect()
-    } == keys_before
-    assert not any(e.startswith("_compact") for e in os.listdir(path))
-
-
-def test_compaction_crash_recovery(spark, tmp_path):
-    """A compaction killed between its two swap renames leaves the live
-    `bucket=` dir missing and the rows stranded in `_compact_prev_{id}`
-    (which partition discovery ignores — silent loss). recover_compaction
-    (run on entry to compact_index and at stream start) restores the
-    backup, clears stale backups/stagings, and is idempotent."""
-    import shutil
-
-    import pandas as pd
-
-    from refine_spark.streaming import (
-        _bucketed, compact_index, recover_compaction,
-    )
-
-    path = str(tmp_path / "idx")
-    pdf = pd.DataFrame(
-        {"sample_key": [f"k{j}" for j in range(64)], "rep": "r"}
-    )
-    _bucketed(spark.createDataFrame(pdf), ["sample_key"]).write.mode(
-        "append"
-    ).partitionBy("bucket").parquet(path)
-    rows_before = spark.read.parquet(path).count()
-    buckets = [e for e in os.listdir(path) if e.startswith("bucket=")]
-    victim = buckets[0]
-    bucket_id = victim.split("=", 1)[1]
-
-    # simulate the crash window: live dir renamed away, staging present
-    os.rename(
-        os.path.join(path, victim),
-        os.path.join(path, f"_compact_prev_{bucket_id}"),
-    )
-    os.makedirs(os.path.join(path, f"_compact_staging_{bucket_id}"))
-    # the bucket's rows are invisible until recovery
-    assert spark.read.parquet(path).count() < rows_before
-
-    restored = recover_compaction(path)
-    assert restored == [int(bucket_id)]
-    assert spark.read.parquet(path).count() == rows_before
-    assert not any(e.startswith("_compact") for e in os.listdir(path))
-    assert recover_compaction(path) == []  # idempotent
-
-    # stale backup (crash AFTER the swap, before cleanup): bucket dir
-    # exists -> the backup is simply dropped, no data change
-    stale = os.path.join(path, f"_compact_prev_{bucket_id}")
-    shutil.copytree(os.path.join(path, victim), stale)
-    assert recover_compaction(path) == []
-    assert not os.path.exists(stale)
-    assert spark.read.parquet(path).count() == rows_before
-
-    # compact_index itself heals before compacting
-    os.rename(
-        os.path.join(path, victim),
-        os.path.join(path, f"_compact_prev_{bucket_id}"),
-    )
-    compact_index(spark, path, max_files_per_bucket=4)
-    assert spark.read.parquet(path).count() == rows_before

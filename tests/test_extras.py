@@ -1,17 +1,14 @@
-"""Tests for training-data extras: analysis, simsearch, multimodal."""
+"""Tests for training-data extras: analysis, simsearch, non-ASCII text, pair gating."""
 
 from __future__ import annotations
 
+from pathlib import Path
+
 import pandas as pd
-import pytest
 from pyspark.sql import functions as F
 
 from refine_spark.analysis import (
     bpe_ish_count, doc_fingerprint, lang_id, token_count, with_quality,
-)
-from refine_spark.multimodal import (
-    MEDIA_SCHEMA, decode_png, decode_wav, encode_png, extract_features,
-    frame_sample, resize_images,
 )
 from refine_spark.simsearch import brute_force_topk, cosine_dup_pairs, lsh_topk
 
@@ -132,165 +129,6 @@ def test_broadcast_row_cap_math():
     assert _broadcast_row_cap(10**9, None, 1024) == 1  # never zero
 
 
-def test_multimodal_plumbing(spark):
-    rows = [
-        ("m1", "image", b"\x89PNG fake bytes" * 20, ("image/png", 4, 4, None)),
-        ("m2", "audio", b"RIFF fake wav" * 30, ("audio/wav", None, None, 1200)),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-    feats = extract_features(df, deterministic_fake=True).collect()
-    assert {r["media_id"] for r in feats} == {"m1", "m2"}
-    assert all(len(r["features"]) == 16 for r in feats)
-    # deterministic across runs
-    feats2 = extract_features(df, deterministic_fake=True).collect()
-    assert sorted(map(str, feats)) == sorted(map(str, feats2))
-
-    with pytest.raises(Exception) as exc:
-        extract_features(df).collect()
-    assert "NotImplementedError" in str(exc.value) or isinstance(
-        exc.value, NotImplementedError
-    )
-
-    fs = frame_sample(df, n_frames=3).collect()
-    assert all(len(r["frame_hashes"]) == 3 for r in fs)
-
-
-def test_decode_features_exception_contract():
-    """Every undecodable payload — wrong magic, RIFF-but-not-WAVE, bad
-    header magic with garbage body, truncated real container — raises
-    NotImplementedError specifically, never a leaked codec exception
-    (wave.Error / zlib.error / struct.error)."""
-    from refine_spark.multimodal import _PNG_MAGIC, decode_features
-
-    bad_payloads = [
-        ("audio", b"RIFF fake wav" * 30),            # RIFF but not WAVE
-        ("audio", b"RIFF\x00\x00\x00\x00WAVEjunk"),  # RIFF/WAVE, bad body
-        ("image", _PNG_MAGIC + b"garbage-not-chunks"),
-        ("image", b"\xff\xd8\xff\xe0 jpeg-ish"),     # malformed JPEG (r4: real codec)
-        ("video", b"\x00\x00\x00\x18ftypmp42"),
-        ("audio", b""),
-        ("image", b""),
-    ]
-    for kind, payload in bad_payloads:
-        with pytest.raises(NotImplementedError):
-            decode_features(payload, kind)
-
-
-def _make_png(h, w, c, seed=3):
-    import numpy as np
-
-    rng = np.random.RandomState(seed)
-    return rng.randint(0, 256, size=(h, w, c), dtype="uint8")
-
-
-def _make_wav(rate=8000, seconds=0.5, freq=440.0):
-    import io as _io
-    import wave
-
-    import numpy as np
-
-    t = np.arange(int(rate * seconds)) / rate
-    pcm = (np.sin(2 * np.pi * freq * t) * 20000).astype("<i2")
-    buf = _io.BytesIO()
-    with wave.open(buf, "wb") as wf:
-        wf.setnchannels(1)
-        wf.setsampwidth(2)
-        wf.setframerate(rate)
-        wf.writeframes(pcm.tobytes())
-    return buf.getvalue()
-
-
-def test_png_codec_roundtrip():
-    import numpy as np
-
-    for c in (1, 3, 4):
-        px = _make_png(13, 7, c)
-        assert np.array_equal(decode_png(encode_png(px)), px)
-
-
-def test_real_codec_features_and_resize(spark):
-    import numpy as np
-
-    png = encode_png(_make_png(16, 12, 3))
-    wav = _make_wav()
-    rows = [
-        ("img", "image", png, ("image/png", 12, 16, None)),
-        ("aud", "audio", wav, ("audio/wav", None, None, 500)),
-    ]
-    df = spark.createDataFrame(rows, MEDIA_SCHEMA)
-
-    feats = {r["media_id"]: r["features"] for r in extract_features(df).collect()}
-    assert feats["img"][0] == 16.0 and feats["img"][1] == 12.0  # real dims
-    assert abs(feats["aud"][0] - 0.5) < 1e-6  # real duration (s)
-    assert 0.3 < feats["aud"][1] < 0.8  # sine RMS ~ 0.43
-
-    # real resize: re-decode the resized payload and check dimensions
-    rz = {r["media_id"]: r for r in resize_images(df, 6, 5).collect()}
-    out = decode_png(bytes(rz["img"]["payload"]))
-    assert out.shape == (5, 6, 3)
-    assert rz["img"]["meta"]["width"] == 6 and rz["img"]["meta"]["height"] == 5
-    # WAV passes through untouched
-    samples, rate = decode_wav(bytes(rz["aud"]["payload"]))
-    assert rate == 8000 and len(samples) == 4000
-
-
-def test_png_decoder_handles_all_filters():
-    """Round-trip through a REAL encoder that exercises filters: zlib's
-    output re-decoded must match; also verify via a sub/up/paeth-filtered
-    encode done by hand."""
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from refine_spark.multimodal import _PNG_MAGIC
-
-    px = _make_png(6, 5, 3, seed=9)
-    h, w, c = px.shape
-    # hand-build rows with a rotating filter type per row (0..4)
-    out_rows = []
-    prev = np.zeros(w * c, dtype=np.int16)
-    for y in range(h):
-        cur = px[y].reshape(-1).astype(np.int16)
-        filt = y % 5
-        if filt == 0:
-            enc = cur.copy()
-        elif filt == 1:  # sub
-            left = np.concatenate([np.zeros(c, np.int16), cur[:-c]])
-            enc = (cur - left) & 0xFF
-        elif filt == 2:  # up
-            enc = (cur - prev) & 0xFF
-        elif filt == 3:  # average
-            left = np.concatenate([np.zeros(c, np.int16), cur[:-c]])
-            enc = (cur - ((left + prev) >> 1)) & 0xFF
-        else:  # paeth
-            left = np.concatenate([np.zeros(c, np.int16), cur[:-c]])
-            ul = np.concatenate([np.zeros(c, np.int16), prev[:-c]])
-            p = left + prev - ul
-            pa, pb, pc_ = np.abs(p - left), np.abs(p - prev), np.abs(p - ul)
-            pred = np.where(
-                (pa <= pb) & (pa <= pc_), left, np.where(pb <= pc_, prev, ul)
-            )
-            enc = (cur - pred) & 0xFF
-        out_rows.append(bytes([filt]) + enc.astype(np.uint8).tobytes())
-        prev = cur
-
-    def chunk(ctype, data):
-        return (
-            struct.pack(">I", len(data)) + ctype + data
-            + struct.pack(">I", zlib.crc32(ctype + data) & 0xFFFFFFFF)
-        )
-
-    payload = (
-        _PNG_MAGIC
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", w, h, 8, 2, 0, 0, 0))
-        + chunk(b"IDAT", zlib.compress(b"".join(out_rows)))
-        + chunk(b"IEND", b"")
-    )
-    assert np.array_equal(decode_png(payload), px)
-
-
 def test_simhash_nonascii_lockstep(spark):
     """ADVICE round-2: engine tokenization transliterates before
     shingling; the DuckDB oracle CTE must replay it char-for-char, or
@@ -323,7 +161,7 @@ def test_simhash_nonascii_lockstep(spark):
     assert normalize_for_shingles("中国 ファイル") == ["zhong", "guo", "fuairu"]
 
     spec = importlib.util.spec_from_file_location(
-        "entrymod", "/root/repo/__spark_entry__.py"
+        "entrymod", Path(__file__).resolve().parents[1] / "__spark_entry__.py"
     )
     entrymod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(entrymod)
@@ -421,113 +259,6 @@ def test_cjk_dedup_end_to_end(spark):
     assert got == want, (got, want)
 
 
-def test_bmp_codec():
-    """Real BMP codec: 24-bit round-trip at padded and unpadded widths,
-    top-down negative-height decode, 32-bit BGRA, 8-bit paletted, and
-    routing through decode_features; malformed/RLE payloads raise
-    NotImplementedError."""
-    import struct
-
-    import numpy as np
-
-    from refine_spark.multimodal import decode_bmp, decode_features, encode_bmp
-
-    for h, w in ((7, 5), (4, 4), (3, 8), (1, 1)):
-        px = _make_png(h, w, 3, seed=h * 10 + w)
-        assert np.array_equal(decode_bmp(encode_bmp(px)), px)
-
-    # top-down: flip rows, negate height in the encoded header
-    px = _make_png(5, 3, 3, seed=2)
-    buf = bytearray(encode_bmp(px[::-1]))
-    buf[22:26] = struct.pack("<i", -5)
-    assert np.array_equal(decode_bmp(bytes(buf)), px[::-1][::-1])
-
-    # 32-bit BGRA, top-down, no padding needed
-    rgba = _make_png(2, 2, 4, seed=4)
-    bgra = rgba[:, :, [2, 1, 0, 3]].tobytes()
-    hdr = struct.pack("<2sIHHI", b"BM", 54 + len(bgra), 0, 0, 54)
-    info = struct.pack("<IiiHHIIiiII", 40, 2, -2, 1, 32, 0, len(bgra), 0, 0, 0, 0)
-    assert np.array_equal(decode_bmp(hdr + info + bgra), rgba)
-
-    # 8-bit paletted: 2 colors, width 3 (stride pads to 4)
-    pal = struct.pack("<4B4B", 10, 20, 30, 0, 200, 150, 100, 0)  # BGRA x2
-    rows = bytes([0, 1, 0, 0]) + bytes([1, 1, 1, 0])  # 2 rows, bottom-up
-    hdr = struct.pack("<2sIHHI", b"BM", 54 + 8 + len(rows), 0, 0, 54 + 8)
-    info = struct.pack("<IiiHHIIiiII", 40, 3, 2, 1, 8, 0, len(rows), 0, 0, 2, 0)
-    img = decode_bmp(hdr + info + pal + rows)
-    assert img.shape == (2, 3, 3)
-    assert img[0].tolist() == [[100, 150, 200]] * 3  # top row = row 2
-    assert img[1].tolist() == [[30, 20, 10], [100, 150, 200], [30, 20, 10]]
-
-    feats = decode_features(encode_bmp(_make_png(6, 6, 3)), "image")
-    assert len(feats) == 16 and feats[0] == 6.0 and feats[1] == 6.0
-
-    import pytest as _pytest
-
-    rle = bytearray(encode_bmp(px))
-    rle[30:34] = struct.pack("<I", 1)  # BI_RLE8
-    for bad in (b"BMshort", bytes(rle), b"not a bmp"):
-        with _pytest.raises(NotImplementedError):
-            decode_bmp(bad)
-
-
-def test_gif_codec():
-    """Real GIF codec: LZW round-trips at sizes that cross code-width
-    growth boundaries and the 4096-entry table reset; interlace
-    deinterleave; extension skipping; malformed payloads raise
-    NotImplementedError."""
-    import struct
-
-    import numpy as np
-
-    from refine_spark.multimodal import (
-        _lzw_decode, _lzw_encode, decode_features, decode_gif, encode_gif,
-    )
-
-    rng = np.random.RandomState(5)
-    # raw LZW round-trip across width growth (mcs=2: codes grow 3->12 bits)
-    for n, alpha in ((10, 2), (500, 4), (20000, 4), (60000, 3)):
-        seq = rng.randint(0, alpha, size=n).tolist()
-        assert _lzw_decode(_lzw_encode(seq, max(2, alpha.bit_length())),
-                           max(2, alpha.bit_length())) == seq
-
-    # full-image round-trips: few colors, many colors, non-square
-    for h, w, colors in ((8, 8, 4), (5, 13, 200), (1, 300, 256), (31, 2, 7)):
-        pal = rng.randint(0, 256, size=(colors, 3)).astype("uint8")
-        px = pal[rng.randint(0, colors, size=(h, w))]
-        assert np.array_equal(decode_gif(encode_gif(px)), px)
-
-    # extension blocks (e.g. GCE) must be skipped
-    px = pal[rng.randint(0, colors, size=(4, 4))]
-    enc = bytearray(encode_gif(px))
-    gce = b"\x21\xf9\x04\x00\x00\x00\x00\x00"
-    body_at = 13 + (len(enc) - 13 - 2) - 0  # insert right before descriptor
-    at = enc.index(0x2C, 13)
-    with_ext = bytes(enc[:at]) + gce + bytes(enc[at:])
-    assert np.array_equal(decode_gif(with_ext), px)
-
-    # interlaced flag: encode rows in interlace order, set the flag
-    h, w = 9, 4
-    px = pal[rng.randint(0, colors, size=(h, w))]
-    order = np.concatenate(
-        [np.arange(0, h, 8), np.arange(4, h, 8), np.arange(2, h, 4),
-         np.arange(1, h, 2)]
-    )
-    enc2 = bytearray(encode_gif(px[order]))
-    d_at = enc2.index(0x2C, 13)
-    enc2[d_at + 9] |= 0x40  # image-descriptor interlace flag
-    assert np.array_equal(decode_gif(bytes(enc2)), px)
-
-    feats = decode_features(encode_gif(px), "image")
-    assert len(feats) == 16 and feats[0] == float(h)
-
-    import pytest as _pytest
-
-    for bad in (b"GIF89a", b"GIF89a" + struct.pack("<HHBBB", 2, 2, 0, 0, 0),
-                b"JIF89a whatever"):
-        with _pytest.raises(NotImplementedError):
-            decode_gif(bad)
-
 def test_multitable_bucketing_fused_single_pass(spark):
     """Round-4 fusion guard: the multi-table LSH bucketing must (a) be
     bit-identical per table to the single-table UDF it replaced and
@@ -571,158 +302,6 @@ def test_multitable_bucketing_fused_single_pass(spark):
         banded.explain("formatted")
     n_py = len(re.findall(r"\(\d+\) ArrowEvalPython", buf.getvalue()))
     assert n_py == 1, buf.getvalue()
-
-def test_jpeg_codec():
-    """Baseline JPEG (round 4): encode->decode round-trips within DCT
-    rounding (flat quant), for RGB/gray/odd sizes/flat color, with and
-    without restart markers; non-baseline frames and truncated scans
-    raise NotImplementedError through decode_features."""
-    import numpy as np
-
-    from refine_spark.multimodal import (
-        decode_features, decode_jpeg, encode_jpeg,
-    )
-
-    rng = np.random.RandomState(9)
-
-    def err(a, b):
-        return int(np.abs(a.astype(int) - b.astype(int)).max())
-
-    rgb = rng.randint(0, 256, (21, 34, 3), dtype=np.uint8)
-    out = decode_jpeg(encode_jpeg(rgb))
-    assert out.shape == rgb.shape and err(out, rgb) <= 3
-
-    gray = rng.randint(0, 256, (16, 9), dtype=np.uint8)
-    assert err(decode_jpeg(encode_jpeg(gray)), gray) <= 3
-
-    flat = np.full((8, 8, 3), 77, dtype=np.uint8)
-    assert err(decode_jpeg(encode_jpeg(flat)), flat) == 0
-
-    # restart markers: DRI written, RSTn consumed, predictors reset
-    dri = encode_jpeg(rgb, restart_interval=2)
-    assert b"\xff\xdd" in dri and b"\xff\xd0" in dri
-    assert err(decode_jpeg(dri), rgb) <= 3
-
-    # features flow through the real decoder (dims are features 0/1)
-    feats = decode_features(encode_jpeg(rgb), "image")
-    assert feats[0] == 21.0 and feats[1] == 34.0
-
-    # progressive (SOF2) refused, not mis-decoded
-    prog = bytearray(encode_jpeg(rgb))
-    i = prog.index(b"\xff\xc0")
-    prog[i + 1] = 0xC2
-    with pytest.raises(NotImplementedError):
-        decode_features(bytes(prog), "image")
-
-    # truncated entropy segment -> wrapped NotImplementedError
-    trunc = encode_jpeg(rgb)[:-40]
-    with pytest.raises(NotImplementedError):
-        decode_features(trunc, "image")
-
-def test_jpeg_420_subsampling():
-    """4:2:0 encode (luma 2x2 factors, block-mean chroma) drives the
-    decoder's multi-block MCU interleave and replication upsample —
-    flat color round-trips exactly; smooth gradients stay within the
-    chroma-pooling error; restart markers compose with subsampling."""
-    import numpy as np
-
-    from refine_spark.multimodal import decode_jpeg, encode_jpeg
-
-    def err(a, b):
-        return int(np.abs(a.astype(int) - b.astype(int)).max())
-
-    flat = np.full((24, 40, 3), 130, dtype=np.uint8)
-    assert err(decode_jpeg(encode_jpeg(flat, subsample=True)), flat) == 0
-
-    yy, xx = np.mgrid[0:33, 0:50]
-    grad = np.stack(
-        [np.clip(yy * 3, 0, 255), np.clip(xx * 2, 0, 255),
-         np.full_like(yy, 90)], axis=-1,
-    ).astype(np.uint8)
-    assert err(decode_jpeg(encode_jpeg(grad, subsample=True)), grad) <= 12
-    assert err(
-        decode_jpeg(encode_jpeg(grad, subsample=True, restart_interval=2)),
-        grad,
-    ) <= 12
-
-def _make_mp3(n_frames=40, bitrate_idx=9, sr_idx=0, id3=True):
-    """Synthesize a valid MPEG-1 Layer III stream: ID3v2 tag + n CBR
-    frames (header + zero payload)."""
-    out = bytearray()
-    if id3:
-        out += b"ID3\x04\x00\x00\x00\x00\x00\x0a" + b"\x00" * 10
-    bitrate = [0, 32, 40, 48, 56, 64, 80, 96, 112, 128, 160, 192, 224,
-               256, 320][bitrate_idx] * 1000
-    rate = [44100, 48000, 32000][sr_idx]
-    frame_len = 144 * bitrate // rate  # no padding bit
-    for _ in range(n_frames):
-        hdr = bytes([0xFF, 0xFB, (bitrate_idx << 4) | (sr_idx << 2), 0x00])
-        out += hdr + b"\x00" * (frame_len - 4)
-    return bytes(out)
-
-
-def _make_mp4(duration=90, timescale=600, n_tracks=2, v1=False):
-    """Synthesize a minimal ISO-BMFF file: ftyp + moov(mvhd + traks)."""
-    import struct as st
-
-    def box(btype, body):
-        return st.pack(">I", len(body) + 8) + btype + body
-
-    if v1:
-        mvhd = box(
-            b"mvhd",
-            bytes([1, 0, 0, 0]) + b"\x00" * 16
-            + st.pack(">I", timescale) + st.pack(">Q", duration) + b"\x00" * 80,
-        )
-    else:
-        mvhd = box(
-            b"mvhd",
-            bytes([0, 0, 0, 0]) + b"\x00" * 8
-            + st.pack(">I", timescale) + st.pack(">I", duration) + b"\x00" * 80,
-        )
-    traks = b"".join(box(b"trak", b"\x00" * 8) for _ in range(n_tracks))
-    return box(b"ftyp", b"mp42\x00\x00\x00\x00mp42") + box(b"moov", mvhd + traks)
-
-
-def test_mp3_mp4_metadata_parsers():
-    """Round 4: mp3/mp4 upgrade from fake-mode to REAL header metadata —
-    frame-walked MPEG-1 Layer III stats and ISO-BMFF mvhd duration/track
-    count; decode_features routes them; garbage still refuses."""
-    import pytest as _pytest
-
-    from refine_spark.multimodal import (
-        decode_features, parse_mp3_meta, parse_mp4_meta,
-    )
-
-    mp3 = _make_mp3(n_frames=40, bitrate_idx=9, sr_idx=0)
-    meta = parse_mp3_meta(mp3)
-    assert meta["n_frames"] == 40
-    assert meta["sample_rate"] == 44100
-    assert abs(meta["bitrate_kbps"] - 128.0) < 1e-9
-    assert abs(meta["duration_ms"] - 40 * 1152 * 1000 / 44100) < 1e-6
-    feats = decode_features(mp3, "audio")
-    assert abs(feats[0] - meta["duration_ms"] / 1000.0) < 1e-9
-    assert feats[3] == 40.0
-
-    # VBR: mixed bitrates -> true mean over frames
-    vbr = _make_mp3(10, bitrate_idx=9) + _make_mp3(10, bitrate_idx=12, id3=False)
-    m = parse_mp3_meta(vbr)
-    assert m["n_frames"] == 20 and abs(m["bitrate_kbps"] - (128 + 224) / 2) < 1e-9
-
-    mp4 = _make_mp4(duration=1200, timescale=600, n_tracks=3)
-    meta4 = parse_mp4_meta(mp4)
-    assert meta4["duration_ms"] == 2000.0
-    assert meta4["n_tracks"] == 3 and meta4["major_brand"] == "mp42"
-    meta4v1 = parse_mp4_meta(_make_mp4(duration=300, timescale=100, v1=True))
-    assert meta4v1["duration_ms"] == 3000.0
-    feats4 = decode_features(mp4, "video")
-    assert feats4[0] == 2.0 and feats4[1] == 3.0
-
-    with _pytest.raises(ValueError):
-        parse_mp3_meta(b"\x00" * 64)
-    with _pytest.raises(NotImplementedError):
-        decode_features(b"\xff\xe0 not really mp3", "audio")
-
 
 def test_pair_broadcast_byte_gate(spark):
     """materialize_pairs must withhold the broadcast hint when the pair

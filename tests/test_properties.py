@@ -124,22 +124,6 @@ def test_normalize_for_shingles_accent_invariance():
 # --- round-2 kernels -------------------------------------------------------
 
 
-@given(
-    st.integers(min_value=1, max_value=12),
-    st.integers(min_value=1, max_value=12),
-    st.sampled_from([1, 3, 4]),
-    st.integers(min_value=0, max_value=2**31 - 1),
-)
-@settings(max_examples=25, deadline=None)
-def test_png_roundtrip_property(h, w, c, seed):
-    import numpy as np
-
-    from refine_spark.multimodal import decode_png, encode_png
-
-    px = np.random.RandomState(seed).randint(0, 256, size=(h, w, c), dtype="uint8")
-    assert np.array_equal(decode_png(encode_png(px)), px)
-
-
 @given(st.lists(st.text(alphabet="ab ", min_size=0, max_size=30), min_size=1, max_size=8))
 @settings(max_examples=50, deadline=None)
 def test_simhash_model_parity(texts):
