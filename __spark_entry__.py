@@ -52,6 +52,7 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
     sc = spark.sparkContext
     if getattr(sc, "_refine_spark_shipped", False):
         return
+    import hashlib
     import os
     import tempfile
     import zipfile
@@ -59,16 +60,27 @@ def _ensure_workers_can_import(spark: SparkSession) -> None:
     import refine_spark
 
     pkg_dir = os.path.dirname(os.path.abspath(refine_spark.__file__))
+    sources = {}
+    for fn in sorted(os.listdir(pkg_dir)):
+        if fn.endswith(".py"):
+            with open(os.path.join(pkg_dir, fn), "rb") as fh:
+                sources[fn] = fh.read()
+    # named by content, so an archive left behind by other code (a reused
+    # pid, an older checkout) is never shipped: workers put shipped files
+    # ahead of PYTHONPATH on sys.path
+    digest = hashlib.sha256()
+    for fn, data in sources.items():
+        digest.update(f"{fn}\0{len(data)}\0".encode())
+        digest.update(data)
     zpath = os.path.join(
-        tempfile.gettempdir(), f"refine_spark_pyfiles_{os.getpid()}.zip"
+        tempfile.gettempdir(), f"refine_spark_pyfiles_{digest.hexdigest()[:16]}.zip"
     )
     if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as zf:
-            for fn in sorted(os.listdir(pkg_dir)):
-                if fn.endswith(".py"):
-                    zf.write(
-                        os.path.join(pkg_dir, fn), f"refine_spark/{fn}"
-                    )
+        tmp = f"{zpath}.{os.getpid()}.tmp"
+        with zipfile.ZipFile(tmp, "w") as zf:
+            for fn, data in sources.items():
+                zf.writestr(f"refine_spark/{fn}", data)
+        os.replace(tmp, zpath)
     sc.addPyFile(zpath)
     sc._refine_spark_shipped = True
 

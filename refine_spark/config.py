@@ -57,7 +57,6 @@ class DedupConfig:
 
     # --- skew / scale knobs ---
     band_cap: int = 2000            # max rows per LSH band key before capping (logged)
-    token_block_df_cap: int = 500   # drop blocking tokens with doc-freq above this
     salt_buckets: int = 16          # salt fan-out for skewed group keys
 
     # --- determinism ---

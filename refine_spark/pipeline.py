@@ -8,7 +8,7 @@ Stages:
              estimated Jaccard verification (JVM-side)       -> edges
   name       inverted-token blocking -> lev/dice/rare scoring
              -> name CC -> sequential-group filter           -> edges
-  substring  winnowing fingerprints -> exact LCS verification -> edges
+  substring  winnowing fingerprints -> shared-run verification -> edges
   cluster    global connected components over all edges + avg-sim stats
 
 Every inter-stage boundary can checkpoint via StageRunner (resume +
@@ -21,7 +21,9 @@ import time
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from .candidates import lsh_candidates, lsh_cap_stats, materialize_pairs
+from .candidates import (
+    bucket_cap_stats, lsh_band_keys, lsh_candidates, materialize_pairs,
+)
 from .clean import with_cleaned_name
 from .cluster import cluster_stats, connected_components, name_pass_clusters
 from .config import DedupConfig, DEFAULT
@@ -29,8 +31,10 @@ from .checkpoint import StageRunner
 from .exact import exact_edges, with_size_kind
 from .scan import with_identity_columns
 from .scoring import name_pass_edges
-from .signatures import simhash_cap_stats, simhash_edges, with_signatures
-from .substring import substring_cap_stats, substring_edges
+from .signatures import (
+    _simhash_reps, simhash_band_keys, simhash_edges, with_signatures,
+)
+from .substring import substring_edges, winnow_fingerprints
 
 
 def minhash_edges(
@@ -135,11 +139,11 @@ def verify_doc_ids(base: DataFrame) -> None:
     """Assert the url-keyed input contract (one row per url — the
     input_hint's per-url invariant) AND that xxhash64(url) is
     collision-free over this corpus, in one narrow three-aggregate job.
-    Run in checkpointed mode, where one extra corpus pass is already the
-    accepted trade for resumability. A violated contract otherwise
-    surfaces deep in the name pass as an opaque DUPLICATED_MAP_KEY (two
-    docs merged under one doc_id put the same token twice in one
-    weight map — observed with a duplicate synth url at 3.2M docs)."""
+    run_dedup runs it in every mode, lazy included, before any edge
+    pass. A violated contract otherwise surfaces deep in the name pass
+    as an opaque DUPLICATED_MAP_KEY (two docs merged under one doc_id
+    put the same token twice in one weight map — observed with a
+    duplicate synth url at 3.2M docs)."""
     row = base.agg(
         F.count(F.lit(1)).alias("n_rows"),
         F.count_distinct("url").alias("n_urls"),
@@ -202,7 +206,12 @@ def run_dedup(
                 )
             )
             _log_cap_stats(
-                runner, "text_edges_cap", lsh_cap_stats(signed, cfg, id_col="doc_id")
+                runner,
+                "text_edges_cap",
+                bucket_cap_stats(
+                    lsh_band_keys(signed, cfg, id_col="doc_id"),
+                    "doc_id", ["band", "band_key"], cfg.band_cap,
+                ),
             )
         if "simhash" in passes:
             edge_frames.append(
@@ -216,7 +225,12 @@ def run_dedup(
             _log_cap_stats(
                 runner,
                 "simhash_edges_cap",
-                simhash_cap_stats(signed, cfg, id_col="doc_id"),
+                bucket_cap_stats(
+                    simhash_band_keys(
+                        _simhash_reps(signed, "doc_id"), cfg, id_col="doc_id"
+                    ),
+                    "doc_id", ["band", "band_key"], cfg.band_cap,
+                ),
             )
 
     if "name" in passes:
@@ -246,7 +260,10 @@ def run_dedup(
         _log_cap_stats(
             runner,
             "substring_edges_cap",
-            substring_cap_stats(base, cfg, id_col="doc_id"),
+            bucket_cap_stats(
+                winnow_fingerprints(base, cfg, id_col="doc_id"),
+                "doc_id", ["fp"], cfg.band_cap,
+            ),
         )
 
     all_edges = edge_frames[0]

@@ -100,52 +100,6 @@ def make_pair_score_udf(cfg: DedupConfig = DEFAULT):
     return dice_udf, rare_udf
 
 
-def token_weights(named: DataFrame, id_col: str = "url") -> DataFrame:
-    """Per-document token-weight table with 1/ln(1+freq) weights from the
-    corpus-wide token frequency aggregate (with multiplicity,
-    dupes.rs:158-165). Frequency is an aggregate DataFrame joined back,
-    which scales; at test sizes Catalyst broadcasts it.
-
-    Columns engineered for the huge pair join downstream:
-      tids    array<long>   distinct token ids (xxhash64), sorted
-      ws      array<double> aligned weights
-      wsum    double        precomputed sum(ws) (saves a per-pair fold)
-      ntok    int           |distinct tokens|
-      nonnum  array<long>   ids of non-numeric tokens (qualification)
-    Long-array set ops are several times cheaper than string arrays and
-    shrink the dominant shuffle. xxhash64 collisions across a corpus
-    vocabulary are negligible (64-bit, birthday bound)."""
-    freq = (
-        named.select(F.explode("tokens").alias("token"))
-        .groupBy("token")
-        .agg(F.count(F.lit(1)).alias("freq"))
-    )
-    tokw = (
-        named.select(id_col, F.explode(F.array_distinct("tokens")).alias("token"))
-        .join(freq, "token")
-        .withColumn("w", F.lit(1.0) / F.log1p(F.col("freq")))
-        .withColumn("tid", F.xxhash64("token"))
-        .withColumn("numeric", ~F.col("token").rlike("[^0-9]"))
-        .groupBy(id_col)
-        .agg(F.sort_array(F.collect_list(F.struct("tid", "w", "numeric"))).alias("tw"))
-        .select(
-            id_col,
-            F.transform("tw", lambda x: x["tid"]).alias("tids"),
-            F.transform("tw", lambda x: x["w"]).alias("ws"),
-            F.aggregate(
-                F.transform("tw", lambda x: x["w"]),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("wsum"),
-            F.size("tw").alias("ntok"),
-            F.transform(
-                F.filter("tw", lambda x: ~x["numeric"]), lambda x: x["tid"]
-            ).alias("nonnum"),
-        )
-    )
-    return tokw
-
-
 def _rare_jvm(cfg: DedupConfig):
     """rare_token_similarity as pure Catalyst higher-order expressions
     over integer token ids (arrays distinct + sorted; weights aligned,
@@ -175,19 +129,24 @@ def _rare_jvm(cfg: DedupConfig):
     return F.when((a_score == 0.0) | (b_score == 0.0), F.lit(0.0)).otherwise(rare)
 
 
-def name_pass_edges(
-    named: DataFrame, cfg: DedupConfig = DEFAULT, id_col: str = "url"
-) -> DataFrame:
-    """The full name pass with ONE token-weight computation shared
-    between candidate generation and scoring.
+def _weight_frame(named: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
+    """One row per (id, distinct token): w = 1/ln(1+freq) from the
+    corpus-wide token frequency (with multiplicity, dupes.rs:158-165),
+    the doc's weight sum `wsum`, and `in_prefix` — the weighted prefix
+    filter that blocks the name pass.
 
-    Candidate generation is the weighted prefix filter
-    (candidates.prefix_block_candidates semantics — exact, no df-cap
-    needed); the per-(url, token, w) frame it builds is immediately
-    re-aggregated into the scoring arrays instead of re-exploding and
-    re-joining frequencies a second time. Edge set is identical to
-    score_name_pairs(prefix_block_candidates(named), named) — pinned by
-    tests/test_pipeline.py."""
+    Any pair the scorer can accept satisfies
+        rare >= bound = (threshold - string_weight) / rare_token_weight
+    (sim = max(lev, dice)*sw + rare*rw with max(...) <= 1), and
+    rare <= inter_score / min(wsum), so the shared-token weight must be
+    >= bound * min(wsum_a, wsum_b). Hence the smaller side must share a
+    token inside its weighted PREFIX — its heaviest (rarest) tokens up
+    to the point where the remaining tail weighs < bound * wsum. A hot
+    (stopword-like) token has near-zero weight, so it almost never sits
+    in any prefix and its posting list is never self-joined — the
+    O(df^2) hot-token blow-up disappears without dropping a single
+    qualifying pair. Frequency is an aggregate DataFrame joined back,
+    which scales; at test sizes Catalyst broadcasts it."""
     from pyspark.sql import Window as W
 
     bound = (cfg.threshold - cfg.string_weight) / cfg.rare_token_weight
@@ -202,26 +161,29 @@ def name_pass_edges(
     )
     wu = W.partitionBy(id_col)
     wcum = wu.orderBy(F.desc("w"), "token").rowsBetween(W.unboundedPreceding, 0)
-    flagged = (
+    return (
         w.withColumn("wsum", F.sum("w").over(wu))
         .withColumn("cum", F.sum("w").over(wcum))
         .withColumn(
             "in_prefix",
             (F.col("cum") - F.col("w")) <= (1.0 - bound) * F.col("wsum"),
         )
-        .localCheckpoint(eager=True)  # feeds candidates AND the arrays
     )
-    probe = flagged.filter("in_prefix").select(F.col(id_col).alias("pu"), "token")
-    index = flagged.select(F.col(id_col).alias("iu"), "token")
-    pairs = (
-        probe.join(index, "token")
-        .filter(F.col("pu") != F.col("iu"))
-        .select(
-            F.least("pu", "iu").alias("src"), F.greatest("pu", "iu").alias("dst")
-        )
-        .dropDuplicates(["src", "dst"])
-    )
-    tokw = (
+
+
+def _weight_arrays(flagged: DataFrame, id_col: str) -> DataFrame:
+    """Per-document scoring arrays from the flagged weight frame.
+
+    Columns engineered for the huge pair join downstream:
+      tids    array<long>   distinct token ids (xxhash64), sorted
+      ws      array<double> aligned weights
+      wsum    double        sum(ws), carried from the weight frame
+      ntok    int           |distinct tokens|
+      nonnum  array<long>   ids of non-numeric tokens (qualification)
+    Long-array set ops are several times cheaper than string arrays and
+    shrink the dominant shuffle. xxhash64 collisions across a corpus
+    vocabulary are negligible (64-bit, birthday bound)."""
+    return (
         flagged.withColumn("tid", F.xxhash64("token"))
         .withColumn("numeric", ~F.col("token").rlike("[^0-9]"))
         .groupBy(id_col)
@@ -240,6 +202,35 @@ def name_pass_edges(
             ).alias("nonnum"),
         )
     )
+
+
+def name_pass_edges(
+    named: DataFrame, cfg: DedupConfig = DEFAULT, id_col: str = "url"
+) -> DataFrame:
+    """The full name pass with ONE token-weight computation shared
+    between candidate generation and scoring.
+
+    Candidate generation is the weighted prefix filter (exact, no df-cap
+    needed; see _weight_frame): each doc's prefix tokens probe the FULL
+    inverted index, then (least, greatest) dedup. The same per-(id,
+    token, w) frame is re-aggregated into the scoring arrays instead of
+    re-exploding and re-joining frequencies a second time.
+    Edge set is identical to scoring every shared-token pair
+    (score_name_pairs over candidates.token_block_candidates) — pinned
+    by tests/test_pipeline.py."""
+    # materialized once: feeds candidates AND the arrays
+    flagged = _weight_frame(named, cfg, id_col).localCheckpoint(eager=True)
+    probe = flagged.filter("in_prefix").select(F.col(id_col).alias("pu"), "token")
+    index = flagged.select(F.col(id_col).alias("iu"), "token")
+    pairs = (
+        probe.join(index, "token")
+        .filter(F.col("pu") != F.col("iu"))
+        .select(
+            F.least("pu", "iu").alias("src"), F.greatest("pu", "iu").alias("dst")
+        )
+        .dropDuplicates(["src", "dst"])
+    )
+    tokw = _weight_arrays(flagged, id_col)
     return _score_pairs_with_weights(pairs, named, tokw, cfg, id_col=id_col)
 
 
@@ -263,9 +254,8 @@ def score_name_pairs(
          0.4 + rare*0.6 < t (dice <= 1) — only the narrow middle band
          pays the bigram-multiset dice pandas UDF.
     """
-    return _score_pairs_with_weights(
-        pairs, named, token_weights(named, id_col), cfg, id_col=id_col
-    )
+    tokw = _weight_arrays(_weight_frame(named, cfg, id_col), id_col)
+    return _score_pairs_with_weights(pairs, named, tokw, cfg, id_col=id_col)
 
 
 def _score_pairs_with_weights(

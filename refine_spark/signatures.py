@@ -169,6 +169,15 @@ def simhash_band_keys(
     return banded.select(id_col, "band", "band_key")
 
 
+def _simhash_reps(docs_with_sig, id_col: str):
+    """One row per distinct fingerprint: (id_col = rep, the min member
+    id; simhash; n_members). The dedupe-before-banding frame whose band
+    keys simhash_edges buckets and the pipeline's cap accounting counts."""
+    return docs_with_sig.groupBy("simhash").agg(
+        F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_members")
+    )
+
+
 def simhash_edges(
     docs_with_sig,
     cfg: DedupConfig = DEFAULT,
@@ -182,7 +191,8 @@ def simhash_edges(
     (thousands of identical fingerprints landing in one 15-bit band
     bucket) can never hit `band_cap` — the cap only truncates when more
     than band_cap DISTINCT fingerprints share a band slice, and that
-    truncation is surfaced via the `capped` flag, not silent. Verify is a
+    truncation is surfaced by the pipeline's cap accounting over the same
+    rep frame (_simhash_reps), not silent. Verify is a
     pure JVM bit_count(xor) <= simhash_max_hamming over representative
     fingerprints — no text, no Python. sim = 1 - hamming/bits.
 
@@ -199,24 +209,13 @@ def simhash_edges(
     from .candidates import _pairs_from_buckets
 
     sigs = docs_with_sig.select(id_col, "simhash")
-    groups = sigs.groupBy("simhash").agg(
-        F.min(id_col).alias("rep"), F.count(F.lit(1)).alias("n_members")
-    )
-    # groups feeds banding, the verify join, AND the expansion joins —
+    # reps feeds banding, the verify join, AND the expansion joins —
     # materialize once (tiny: one row per distinct fingerprint) instead
     # of re-aggregating the corpus in every subplan
-    groups = groups.localCheckpoint(eager=True)
-    reps = groups.select(F.col("rep").alias(id_col), "simhash")
+    reps = _simhash_reps(sigs, id_col).localCheckpoint(eager=True)
 
     banded = simhash_band_keys(reps, cfg, id_col=id_col)
-    rep_pairs = (
-        _pairs_from_buckets(
-            banded, id_col, ["band", "band_key"], cfg.band_cap,
-            assume_unique=True,  # one row per (rep, band)
-        )
-        .select("src", "dst")
-        .dropDuplicates(["src", "dst"])
-    )
+    rep_pairs = _pairs_from_buckets(banded, id_col, ["band", "band_key"], cfg.band_cap)
     a = reps.select(F.col(id_col).alias("src"), F.col("simhash").alias("sh_a"))
     b = reps.select(F.col(id_col).alias("dst"), F.col("simhash").alias("sh_b"))
     rep_edges = (
@@ -235,7 +234,9 @@ def simhash_edges(
     if expand == "star":
         intra = (
             sigs.join(
-                groups.filter(F.col("n_members") > 1).select("simhash", "rep"),
+                reps.filter(F.col("n_members") > 1).select(
+                    "simhash", F.col(id_col).alias("rep")
+                ),
                 "simhash",
             )
             .filter(F.col(id_col) != F.col("rep"))
@@ -246,10 +247,10 @@ def simhash_edges(
             )
         )
         cross = rep_edges.join(
-            groups.select(F.col("simhash").alias("sh_a"), F.col("rep").alias("ra")),
+            reps.select(F.col("simhash").alias("sh_a"), F.col(id_col).alias("ra")),
             "sh_a",
         ).join(
-            groups.select(F.col("simhash").alias("sh_b"), F.col("rep").alias("rb")),
+            reps.select(F.col("simhash").alias("sh_b"), F.col(id_col).alias("rb")),
             "sh_b",
         ).select(
             F.least("ra", "rb").alias("src"),
@@ -261,10 +262,9 @@ def simhash_edges(
     # expand == "pairs": exact hamming-ball pair semantics
     # intra-group: all (i < j) member pairs per identical fingerprint
     intra = (
-        _pairs_from_buckets(
-            sigs, id_col, ["simhash"], cap=1 << 30,
-            assume_unique=True,  # sigs is one row per id
-        )
+        sigs.select(F.col(id_col).alias("src"), "simhash")
+        .join(sigs.select(F.col(id_col).alias("dst"), "simhash"), "simhash")
+        .filter(F.col("src") < F.col("dst"))
         .select("src", "dst", F.lit(0).alias("ham"))
     )
     # cross-group: every member-of-A x member-of-B pair per rep edge
@@ -278,21 +278,6 @@ def simhash_edges(
         "ham",
     )
     return intra.unionByName(cross).select("src", "dst", sim_expr, pass_col)
-
-
-def simhash_cap_stats(docs_with_sig, cfg: DedupConfig = DEFAULT, id_col: str = "url"):
-    """Cap accounting for the simhash band join (one-row DF), over the
-    same dedupe-before-banding rep frame simhash_edges buckets."""
-    from .candidates import bucket_cap_stats
-
-    reps = (
-        docs_with_sig.select(id_col, "simhash")
-        .groupBy("simhash")
-        .agg(F.min(id_col).alias(id_col))
-        .select(id_col, "simhash")
-    )
-    banded = simhash_band_keys(reps, cfg, id_col=id_col)
-    return bucket_cap_stats(banded, id_col, ["band", "band_key"], cfg.band_cap)
 
 
 def make_signatures_udf(cfg: DedupConfig = DEFAULT):

@@ -265,14 +265,8 @@ def lsh_dup_pairs(
     banded = embeddings.select(
         id_col, F.posexplode(buckets(F.col(vec_col))).alias("tbl", "bucket")
     )
-    pairs = (
-        _pairs_from_buckets(
-            banded, id_col, ["tbl", "bucket"], cfg.band_cap,
-            assume_unique=True,  # posexplode: one row per (id, tbl)
-        )
-        .select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
-        .dropDuplicates(["id_a", "id_b"])
-    )
+    pairs = _pairs_from_buckets(banded, id_col, ["tbl", "bucket"], cfg.band_cap)
+    pairs = pairs.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
     a = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
     b = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
     return (

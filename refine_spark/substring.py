@@ -9,8 +9,10 @@ Aiken, "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD'03):
      (w = winnow_window). Guarantee: any substring shared by two documents
      of length >= w + n - 1 (= min_substring) yields a shared fingerprint.
   2. explode fingerprints -> bucket pairs (same machinery as LSH banding)
-  3. verify candidates with an exact longest-common-substring check
-     (per-pair, pandas UDF) and emit edges when lcs >= min_substring.
+  3. verify candidates per pair (pandas UDF) and emit edges when the
+     shared substring reaches min_substring: by default the rolling-hash
+     run estimate, or an exact longest-common-substring check with
+     `exact_lcs_verify`.
 
 Step 1 is mapInPandas (numpy sliding windows, Arrow batches); steps 2-3 are
 one shuffle + one verify join.
@@ -105,18 +107,6 @@ def winnow_fingerprints(
     return docs.select(id_col, "text").mapInPandas(gen, f"{id_col} {id_type}, fp long")
 
 
-def substring_cap_stats(
-    docs: DataFrame, cfg: DedupConfig = DEFAULT, id_col: str = "url"
-) -> DataFrame:
-    """Cap accounting for the winnowing-fingerprint bucket join (one-row
-    DF). Recomputes fingerprints — intended for checkpointed (non-lazy)
-    pipeline runs where the accounting is worth one extra narrow pass."""
-    from .candidates import bucket_cap_stats
-
-    fps = winnow_fingerprints(docs, cfg, id_col=id_col)
-    return bucket_cap_stats(fps, id_col, ["fp"], cfg.band_cap)
-
-
 def substring_edges(
     docs: DataFrame, cfg: DedupConfig = DEFAULT, id_col: str = "url"
 ) -> DataFrame:
@@ -127,14 +117,7 @@ def substring_edges(
     # and exchange reuse is not guaranteed under AQE — without this the
     # CPU-heavy mapInPandas winnowing stage can run per subplan
     fps = winnow_fingerprints(docs, cfg, id_col=id_col).localCheckpoint(eager=True)
-    pairs = (
-        _pairs_from_buckets(
-            fps, id_col, ["fp"], cfg.band_cap,
-            assume_unique=True,  # np.unique per doc upstream
-        )
-        .select("src", "dst")
-        .dropDuplicates(["src", "dst"])
-    )
+    pairs = _pairs_from_buckets(fps, id_col, ["fp"], cfg.band_cap)
     texts = docs.select(id_col, "text")
     a = texts.select(F.col(id_col).alias("src"), F.col("text").alias("text_a"))
     b = texts.select(F.col(id_col).alias("dst"), F.col("text").alias("text_b"))

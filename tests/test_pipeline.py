@@ -71,9 +71,9 @@ def test_stage_runner_recomputes_partial_stage(spark, tmp_path):
 def test_name_pass_prefix_blocking_exact(spark):
     """Weighted prefix filtering must not change the name-pass edge set
     vs scoring ALL shared-token pairs (the bound argument in
-    candidates.prefix_block_candidates), and the fused name_pass_edges
-    must equal the two-step composition."""
-    from refine_spark.candidates import prefix_block_candidates, token_block_candidates
+    scoring._weight_frame): the fused name_pass_edges must equal
+    score_name_pairs over uncapped inverted-token blocking."""
+    from refine_spark.candidates import token_block_candidates
     from refine_spark.config import DedupConfig
     from refine_spark.pipeline import prepare
     from refine_spark.scoring import name_pass_edges, score_name_pairs
@@ -83,24 +83,17 @@ def test_name_pass_prefix_blocking_exact(spark):
         "url", "cleaned_name", "tokens", "kind"
     )
     # uncapped full blocking = the reference's inverted-index semantics
-    cfg = DedupConfig(token_block_df_cap=10**9, band_cap=10**9)
+    cfg = DedupConfig(band_cap=10**9)
     full = {
         (r[0], r[1], round(r[2], 9))
         for r in score_name_pairs(
             token_block_candidates(named, cfg), named
         ).select("src", "dst", "sim").collect()
     }
-    pref = {
-        (r[0], r[1], round(r[2], 9))
-        for r in score_name_pairs(
-            prefix_block_candidates(named), named
-        ).select("src", "dst", "sim").collect()
-    }
     fused = {
         (r[0], r[1], round(r[2], 9))
         for r in name_pass_edges(named).select("src", "dst", "sim").collect()
     }
-    assert pref == full
     assert fused == full
 
 
@@ -248,6 +241,39 @@ def test_cap_stats_metrics_logged(spark):
     result2 = run_dedup(spark, docs, passes=("text",))
     extra = {m["stage"]: m for m in result2["metrics"]}["text_edges_cap"]["extra"]
     assert "capped_buckets=0" in extra and "est_dropped_pairs=0" in extra
+
+
+def test_pairs_from_buckets_cap_contract(spark):
+    """The bucket-pair operator on a planted hot bucket of n > cap ids:
+    distinct src < dst pairs, the hot bucket reduced to all pairs of its
+    cap smallest ids, and bucket_cap_stats reporting the exact shortfall
+    C(n,2) - C(cap,2)."""
+    from itertools import combinations
+
+    from refine_spark.candidates import _pairs_from_buckets, bucket_cap_stats
+
+    n, cap = 7, 4
+    hot = [16, 12, 10, 15, 11, 14, 13]  # key 1, shuffled
+    rows = [(1, i) for i in hot]
+    # cold buckets: (100, 101) shares keys 2 and 3, so it is emitted twice
+    # before the operator's dedup
+    rows += [(2, 100), (2, 101), (3, 101), (3, 100), (3, 102), (4, 103)]
+    keyed = spark.createDataFrame(rows, "k long, id long")
+
+    pairs = _pairs_from_buckets(keyed, "id", ["k"], cap)
+    out = [(r["src"], r["dst"]) for r in pairs.collect()]
+    assert len(out) == len(set(out))
+    assert all(s < d for s, d in out)
+    want_hot = set(combinations(sorted(hot)[:cap], 2))
+    assert {p for p in out if p[0] < 100} == want_hot
+    assert len(want_hot) == cap * (cap - 1) // 2
+    assert {p for p in out if p[0] >= 100} == {(100, 101), (100, 102), (101, 102)}
+
+    stats = bucket_cap_stats(keyed, "id", ["k"], cap).collect()[0]
+    assert stats["n_buckets"] == 3  # key 4 is a singleton
+    assert stats["n_capped"] == 1
+    assert stats["est_dropped_pairs"] == n * (n - 1) // 2 - cap * (cap - 1) // 2
+
 
 def test_edge_passes_shuffle_int_ids_not_urls(spark):
     """Round-4 scale guard: with the pipeline's int64 doc_id threaded
