@@ -98,9 +98,7 @@ def _pairs_from_buckets(
     return pairs.select("p.src", "p.dst").dropDuplicates(["src", "dst"])
 
 
-def bucket_cap_stats(
-    keyed: DataFrame, id_col: str, key_cols: list[str], cap: int
-) -> DataFrame:
+def bucket_cap_stats(keyed: DataFrame, key_cols: list[str], cap: int) -> DataFrame:
     """One-row accounting of what the band cap silently drops: over the
     same bucket frame _pairs_from_buckets consumes, count multi-member
     buckets, capped buckets, and the exact pair shortfall

@@ -93,7 +93,6 @@ _BASE_TABLE: dict[str, str] = {
 # decompose-first pipeline can never tell ga from ka; looking the
 # composed char up first keeps voiced kana voiced on BOTH sides.
 TRANSLIT_TABLE: dict[str, str] = {**_BASE_TABLE, **CJK_TABLE}
-_TRANSLIT_EXTRA = TRANSLIT_TABLE  # backwards-compat alias
 
 # ASCII fast-path precondition: for any ASCII char the per-char loop below
 # is the identity (table miss -> hangul miss -> NFKD(c) == c, not

@@ -73,13 +73,28 @@ def _driver_union_find(edges_pdf: pd.DataFrame, id_col: str, spark):
     return spark.createDataFrame(out)
 
 
+# driver fast-path cutover shared by both CC entry points
+_DRIVER_MAX_ROWS = 2_000_000
+_DRIVER_MAX_BYTES = 768 * 1024 * 1024
+
+
+def _fits_driver(
+    edges: DataFrame,
+    max_rows: int = _DRIVER_MAX_ROWS,
+    max_bytes: int = _DRIVER_MAX_BYTES,
+) -> bool:
+    """Whether `edges` is small enough to collect to the driver. One job:
+    row count and byte estimate fused into a single agg."""
+    n_edges, est_bytes = count_and_est_bytes(edges)
+    return n_edges <= max_rows and est_bytes <= max_bytes
+
+
 def connected_components(
     edges: DataFrame,
     id_col: str = "url",
-    max_iter: int = 25,
     salt_buckets: int = 16,
-    driver_cutover: int = 2_000_000,
-    driver_max_bytes: int = 768 * 1024 * 1024,
+    driver_cutover: int = _DRIVER_MAX_ROWS,
+    driver_max_bytes: int = _DRIVER_MAX_BYTES,
 ) -> DataFrame:
     """Label each vertex of the undirected edge set (src, dst) with the
     minimum vertex id reachable from it. Returns (id, cluster_id).
@@ -89,14 +104,12 @@ def connected_components(
     distributed loop's fixed per-iteration latency would dominate).
     Larger sets run iterative min-label propagation — one join + one
     salted aggregation per round, checkpointed to cut lineage — which is
-    the 10^12-scale path. Duplicate-cluster diameters are small, so the
-    loop converges in a few rounds.
+    the 10^12-scale path. It runs until no label changes: labels only
+    decrease, so it always terminates, and duplicate-cluster diameters
+    are small, so it converges in a few rounds.
     """
     dedup = edges.select("src", "dst").dropDuplicates(["src", "dst"])
-    # one driver job decides the cutover: count + byte estimate fused
-    # (the round-3/4 limit(256).collect() sampling pass is gone)
-    n_edges, est_bytes = count_and_est_bytes(dedup)
-    if n_edges <= driver_cutover and est_bytes <= driver_max_bytes:
+    if _fits_driver(dedup, driver_cutover, driver_max_bytes):
         spark = edges.sparkSession
         return _driver_union_find(dedup.toPandas(), id_col, spark)
 
@@ -116,7 +129,7 @@ def connected_components(
     # string would coerce the whole union to strings, silently switching
     # min() to lexicographic order for int64 doc-id labels
     label_type = dict(dedup.dtypes)["src"]
-    for _ in range(max_iter):
+    while True:
         # propagate: each vertex learns its neighbors' labels; the vertex's
         # own row is marked so the aggregation yields (new_label, old_label)
         # in ONE pass — no separate convergence join
@@ -230,8 +243,6 @@ def sequential_cluster_ids(
 
 def name_pass_clusters(
     name_edges: DataFrame, named: DataFrame, cfg: DedupConfig = DEFAULT,
-    driver_cutover: int = 2_000_000,
-    driver_max_bytes: int = 768 * 1024 * 1024,
     id_col: str = "url",
 ) -> tuple[DataFrame, DataFrame]:
     """Reference 'similar pass' output: (clusters, surviving_edges).
@@ -246,11 +257,9 @@ def name_pass_clusters(
     fixed latency dwarfs the work at accepted-edge volumes; above it, the
     full DataFrame path runs.
     """
-    n_edges, est_bytes = count_and_est_bytes(
-        name_edges.select("src", "dst"), per_row_overhead=56  # +8: sim col
-    )
-    if n_edges <= driver_cutover and est_bytes <= driver_max_bytes:
-        return _name_pass_driver(name_edges, named, id_col)
+    collected = name_edges.select("src", "dst", "sim")
+    if _fits_driver(collected):
+        return _name_pass_driver(collected, named, id_col)
 
     labels = connected_components(
         name_edges, id_col=id_col, salt_buckets=cfg.salt_buckets
@@ -264,27 +273,30 @@ def name_pass_clusters(
     return clusters, surviving
 
 
-def _name_pass_driver(name_edges: DataFrame, named: DataFrame, id_col: str = "url"):
-    """Driver-side pandas implementation of the similar-pass epilogue.
-    Same semantics as the distributed path; Arrow transfer both ways."""
+def _name_pass_driver(name_edges: DataFrame, named: DataFrame, id_col: str):
+    """Driver-side pandas implementation of the similar-pass epilogue over
+    (src, dst, sim) edges. Same semantics as the distributed path; Arrow
+    transfer both ways."""
     spark = name_edges.sparkSession
-    epdf = name_edges.select("src", "dst", "sim").toPandas()
+    epdf = name_edges.toPandas()
+    # explicit DDL for zero-row outputs: schema inference over empty
+    # object-dtype pandas columns fails, and on the doc_id path the id
+    # columns must come out bigint, not string
+    id_t = "bigint" if pd.api.types.is_integer_dtype(epdf["src"]) else "string"
+    clusters_ddl = (
+        f"{id_col} {id_t}, cluster_id {id_t}, avg_sim double,"
+        " n_edges long, cluster_size long"
+    )
+    surviving_ddl = f"src {id_t}, dst {id_t}, sim double, pass_name string"
+
+    def frame(pdf: pd.DataFrame, ddl: str) -> DataFrame:
+        if len(pdf):
+            return spark.createDataFrame(pdf)
+        return spark.createDataFrame([], ddl)
+
     if not len(epdf):
-        # typed empties up front: every createDataFrame below would
-        # otherwise hit empty-object-column schema inference (the same
-        # failure mode as the zero-cluster branch), and the `touched`
-        # frame one line down was reachable with zero name edges
-        id_t = "bigint" if pd.api.types.is_integer_dtype(epdf["src"]) else "string"
-        return (
-            spark.createDataFrame(
-                [],
-                f"{id_col} {id_t}, cluster_id {id_t}, avg_sim double,"
-                " n_edges long, cluster_size long",
-            ),
-            spark.createDataFrame(
-                [], f"src {id_t}, dst {id_t}, sim double, pass_name string"
-            ),
-        )
+        # the `touched` frame below would hit the same inference failure
+        return frame(epdf, clusters_ddl), frame(epdf, surviving_ddl)
     touched = spark.createDataFrame(
         pd.DataFrame({id_col: pd.unique(epdf[["src", "dst"]].to_numpy().ravel())})
     )
@@ -322,31 +334,9 @@ def _name_pass_driver(name_edges: DataFrame, named: DataFrame, id_col: str = "ur
         if root not in sequential_roots and len(us) > 1
         for u in us
     ]
-    # explicit DDL for the zero-row branch: schema inference over empty
-    # object-dtype pandas columns fails, and on the doc_id path the id
-    # columns must come out bigint, not string (same fix as `surviving`)
-    id_t = "bigint" if pd.api.types.is_integer_dtype(epdf["src"]) else "string"
-    clusters = (
-        spark.createDataFrame(
-            pd.DataFrame(
-                rows,
-                columns=[id_col, "cluster_id", "avg_sim", "n_edges", "cluster_size"],
-            )
-        )
-        if rows
-        else spark.createDataFrame(
-            [],
-            f"{id_col} {id_t}, cluster_id {id_t}, avg_sim double,"
-            " n_edges long, cluster_size long",
-        )
+    clusters = pd.DataFrame(
+        rows, columns=[id_col, "cluster_id", "avg_sim", "n_edges", "cluster_size"]
     )
     keep_mask = ~edge_root.isin(sequential_roots).to_numpy()
     surv_pdf = epdf[keep_mask].assign(pass_name="name")
-    surviving = (
-        spark.createDataFrame(surv_pdf)
-        if len(surv_pdf)
-        else spark.createDataFrame(
-            [], f"src {id_t}, dst {id_t}, sim double, pass_name string"
-        )
-    )
-    return clusters, surviving
+    return frame(clusters, clusters_ddl), frame(surv_pdf, surviving_ddl)

@@ -210,7 +210,7 @@ def run_dedup(
                 "text_edges_cap",
                 bucket_cap_stats(
                     lsh_band_keys(signed, cfg, id_col="doc_id"),
-                    "doc_id", ["band", "band_key"], cfg.band_cap,
+                    ["band", "band_key"], cfg.band_cap,
                 ),
             )
         if "simhash" in passes:
@@ -229,7 +229,7 @@ def run_dedup(
                     simhash_band_keys(
                         _simhash_reps(signed, "doc_id"), cfg, id_col="doc_id"
                     ),
-                    "doc_id", ["band", "band_key"], cfg.band_cap,
+                    ["band", "band_key"], cfg.band_cap,
                 ),
             )
 
@@ -262,7 +262,7 @@ def run_dedup(
             "substring_edges_cap",
             bucket_cap_stats(
                 winnow_fingerprints(base, cfg, id_col="doc_id"),
-                "doc_id", ["fp"], cfg.band_cap,
+                ["fp"], cfg.band_cap,
             ),
         )
 

@@ -12,9 +12,11 @@ Spark-first split:
   - levenshtein: builtin JVM expression (whole-stage codegen)
   - corpus token frequency: an aggregate DataFrame joined back (NOT a
     broadcast map — the freq table is corpus-sized at 10^12 docs)
-  - dice + rare-token: one vectorized pandas UDF over Arrow batches
-    (multiset bigram intersection / weighted set ops are not expressible
-    as builtins without per-pair explodes)
+  - rare-token: Catalyst higher-order expressions over token-id arrays
+    (_rare_jvm; _rare_token_sim is its pure-Python reference)
+  - dice: one vectorized pandas UDF over Arrow batches (the multiset
+    bigram intersection is not expressible as builtins without per-pair
+    explodes)
 """
 
 from __future__ import annotations
@@ -76,35 +78,20 @@ def _rare_token_sim(
     return base * ratio**exp
 
 
-def make_pair_score_udf(cfg: DedupConfig = DEFAULT):
-    exp_few, exp_many = cfg.penalty_exp_few, cfg.penalty_exp_many
-
-    @F.pandas_udf(T.DoubleType())
-    def dice_udf(name_a: pd.Series, name_b: pd.Series) -> pd.Series:
-        return pd.Series(
-            [_sorensen_dice(x, y) for x, y in zip(name_a, name_b)], dtype="float64"
-        )
-
-    @F.pandas_udf(T.DoubleType())
-    def rare_udf(
-        tok_a: pd.Series, w_a: pd.Series, tok_b: pd.Series, w_b: pd.Series
-    ) -> pd.Series:
-        return pd.Series(
-            [
-                _rare_token_sim(ta, wa, tb, wb, exp_few, exp_many)
-                for ta, wa, tb, wb in zip(tok_a, w_a, tok_b, w_b)
-            ],
-            dtype="float64",
-        )
-
-    return dice_udf, rare_udf
+@F.pandas_udf(T.DoubleType())
+def _dice_udf(name_a: pd.Series, name_b: pd.Series) -> pd.Series:
+    """Vectorized _sorensen_dice over two name columns."""
+    return pd.Series(
+        [_sorensen_dice(x, y) for x, y in zip(name_a, name_b)], dtype="float64"
+    )
 
 
 def _rare_jvm(cfg: DedupConfig):
     """rare_token_similarity as pure Catalyst higher-order expressions
     over integer token ids (arrays distinct + sorted; weights aligned,
-    weight sums precomputed). Bit-for-bit the same math as
-    _rare_token_sim / the reference (dupes.rs:408-457)."""
+    weight sums precomputed). The same math as _rare_token_sim / the
+    reference (dupes.rs:408-457), equal to it within float rounding, not
+    bit for bit: the shared-token weights are summed in another order."""
     a_score = F.col("wsum_a")
     b_score = F.col("wsum_b")
     inter = F.array_intersect("tids_a", "tids_b")
@@ -265,7 +252,6 @@ def _score_pairs_with_weights(
     cfg: DedupConfig = DEFAULT,
     id_col: str = "url",
 ) -> DataFrame:
-    dice_udf, _ = make_pair_score_udf(cfg)
     sw, rw, t = cfg.string_weight, cfg.rare_token_weight, cfg.threshold
     # The candidate-pair table is huge (every token-block pair), so the
     # big join carries only the MINIMAL payload per side: kind + distinct
@@ -312,7 +298,7 @@ def _score_pairs_with_weights(
         F.length("name_a"), F.length("name_b"), F.lit(1)
     )
     final = withnames.withColumn("lev", lev_norm).withColumn(
-        "dice", dice_udf(F.col("name_a"), F.col("name_b"))
+        "dice", _dice_udf(F.col("name_a"), F.col("name_b"))
     ).withColumn(
         "sim", F.greatest(F.col("lev"), F.col("dice")) * sw + F.col("rare") * rw
     )

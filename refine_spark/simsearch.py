@@ -16,6 +16,8 @@ Arrow batches); scoring stays in JVM expressions.
 
 from __future__ import annotations
 
+from itertools import combinations
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
@@ -39,6 +41,14 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
+def _unit_rows(vecs: pd.Series) -> np.ndarray:
+    """Stack a vector column into a float64 matrix with unit-norm rows
+    (zero rows stay zero)."""
+    mat = np.stack(vecs.to_numpy()).astype(np.float64)
+    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
+    return mat
+
+
 def _broadcast_matrix(df: DataFrame, id_col: str, vec_col: str):
     """Collect the SMALL side to a normalized numpy matrix and broadcast it.
 
@@ -46,10 +56,7 @@ def _broadcast_matrix(df: DataFrame, id_col: str, vec_col: str):
     set, or a corpus that fits one executor); the big side streams through
     mapInPandas and never shuffles."""
     pdf = df.select(id_col, vec_col).toPandas()
-    ids = pdf[id_col].to_numpy()
-    mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    mat /= np.maximum(np.linalg.norm(mat, axis=1, keepdims=True), 1e-12)
-    return ids, mat
+    return pdf[id_col].to_numpy(), _unit_rows(pdf[vec_col])
 
 
 def brute_force_topk(
@@ -76,9 +83,7 @@ def brute_force_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            c_mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            c_mat /= np.maximum(np.linalg.norm(c_mat, axis=1, keepdims=True), 1e-12)
-            sims = c_mat @ mat_q.T  # (batch, n_queries)
+            sims = _unit_rows(pdf[vec_col]) @ mat_q.T  # (batch, n_queries)
             c_ids = pdf[id_col].to_numpy()
             out_q, out_c, out_s = [], [], []
             for j in range(len(ids_q)):
@@ -122,9 +127,7 @@ def rademacher_planes(dim: int, n_planes: int, table: int = 0) -> np.ndarray:
     return planes
 
 
-def make_hyperplane_udf(
-    dim: int, n_planes: int = 16, cfg: DedupConfig = DEFAULT, table: int = 0
-):
+def make_hyperplane_udf(dim: int, n_planes: int = 16, table: int = 0):
     """Random-hyperplane bucket id (one LSH table)."""
     planes = rademacher_planes(dim, n_planes, table)
 
@@ -138,9 +141,7 @@ def make_hyperplane_udf(
     return bucket_udf
 
 
-def make_multitable_hyperplane_udf(
-    dim: int, n_planes: int, n_tables: int, cfg: DedupConfig = DEFAULT
-):
+def make_multitable_hyperplane_udf(dim: int, n_planes: int, n_tables: int):
     """All `n_tables` bucket ids in ONE pass: array<long> of length
     n_tables per row, element t bit-identical to
     make_hyperplane_udf(table=t) (the per-table plane blocks are simply
@@ -168,23 +169,11 @@ def make_multitable_hyperplane_udf(
 def _probe_masks(n_planes: int, radius: int) -> list[int]:
     """All xor masks of hamming weight <= radius over n_planes bits
     (multi-probe LSH: neighboring buckets differ in few sign bits)."""
-    masks = [0]
-    if radius >= 1:
-        masks += [1 << i for i in range(n_planes)]
-    if radius >= 2:
-        masks += [
-            (1 << i) | (1 << j)
-            for i in range(n_planes)
-            for j in range(i + 1, n_planes)
-        ]
-    if radius >= 3:
-        masks += [
-            (1 << i) | (1 << j) | (1 << l)
-            for i in range(n_planes)
-            for j in range(i + 1, n_planes)
-            for l in range(j + 1, n_planes)
-        ]
-    return masks
+    return [
+        sum(1 << i for i in bits)
+        for weight in range(radius + 1)
+        for bits in combinations(range(n_planes), weight)
+    ]
 
 
 def lsh_topk(
@@ -196,7 +185,6 @@ def lsh_topk(
     probe_radius: int = 0,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    cfg: DedupConfig = DEFAULT,
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane bucket equi-join, then exact
     cosine rerank within the bucket. Recall rises with fewer planes
@@ -208,7 +196,7 @@ def lsh_topk(
 
     from .partitioning import spread_small
 
-    bucket = make_hyperplane_udf(dim, n_planes, cfg)
+    bucket = make_hyperplane_udf(dim, n_planes)
     c = spread_small(corpus.select(id_col, vec_col)).withColumn(
         "bucket", bucket(F.col(vec_col))
     )
@@ -261,7 +249,7 @@ def lsh_dup_pairs(
     # ONE fused bucketing pass over the corpus (round-3 ran a separate
     # UDF scan per table — n_tables corpus reads + Arrow round-trips);
     # posexplode recovers the (table, bucket) banding rows
-    buckets = make_multitable_hyperplane_udf(dim, n_planes, n_tables, cfg)
+    buckets = make_multitable_hyperplane_udf(dim, n_planes, n_tables)
     banded = embeddings.select(
         id_col, F.posexplode(buckets(F.col(vec_col))).alias("tbl", "bucket")
     )
@@ -277,17 +265,12 @@ def lsh_dup_pairs(
     )
 
 
-def _broadcast_row_cap(
-    dim: int, broadcast_max_rows: int | None, driver_budget_bytes: int
-) -> int:
+def _broadcast_row_cap(dim: int, driver_budget_bytes: int) -> int:
     """Rows the exact path may collect: byte-budget / row-bytes.
 
     The broadcast matrix is float64, so a row costs dim*8 bytes — a row
     cap that ignores dim (round-2 bug) OOMs the driver at high dim long
-    before the switch. An explicit broadcast_max_rows still wins (tests /
-    callers who know their memory)."""
-    if broadcast_max_rows is not None:
-        return broadcast_max_rows
+    before the switch."""
     return max(1, driver_budget_bytes // max(1, dim * 8))
 
 
@@ -296,10 +279,8 @@ def cosine_dup_pairs(
     threshold: float = 0.95,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_planes: int = 8,
     cfg: DedupConfig = DEFAULT,
     dim: int | None = None,
-    broadcast_max_rows: int | None = None,
     driver_budget_bytes: int = 512 * 1024 * 1024,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos >= t).
@@ -307,11 +288,11 @@ def cosine_dup_pairs(
     Exact path (corpus fits a broadcast): one side broadcast as a
     normalized matrix, the other side block-matmuls per partition (no
     O(N^2)-row shuffle, no interpreted per-element expression).
-    Above the byte-aware row cap (driver_budget_bytes / (dim*8), or an
-    explicit broadcast_max_rows) the exact path would OOM the driver, so
-    it auto-switches to the OR-amplified hyperplane-bucket join
-    (lsh_dup_pairs) — approximate but fully distributed. The gate probes
-    with limit(cap+1).count(), which early-terminates after cap+1 rows
+    Above the byte-aware row cap (driver_budget_bytes / (dim*8)) the
+    exact path would OOM the driver, so it auto-switches to the
+    OR-amplified hyperplane-bucket join (lsh_dup_pairs, at its default
+    n_planes and n_tables) — approximate but fully distributed. The gate
+    collects limit(cap+1), which early-terminates after cap+1 rows
     instead of a full scan of the upstream lineage per call."""
     spark = embeddings.sparkSession
     if dim is None:
@@ -319,7 +300,7 @@ def cosine_dup_pairs(
         if head is None:  # empty corpus: empty pair set, correct schema
             return spark.createDataFrame([], "id_a long, id_b long")
         dim = len(head[0])
-    cap = _broadcast_row_cap(dim, broadcast_max_rows, driver_budget_bytes)
+    cap = _broadcast_row_cap(dim, driver_budget_bytes)
     # gate + collect fused into ONE job: pull at most cap+1 rows; if the
     # corpus fit, this IS the exact path's matrix (the old shape paid a
     # separate limit().count() scan and then re-collected everything).
@@ -330,10 +311,9 @@ def cosine_dup_pairs(
         return lsh_dup_pairs(
             embeddings, threshold, id_col, vec_col, cfg=cfg, dim=dim
         )
-    b_ids = pdf[id_col].to_numpy()
-    b_mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-    b_mat /= np.maximum(np.linalg.norm(b_mat, axis=1, keepdims=True), 1e-12)
-    bc = spark.sparkContext.broadcast((b_ids, b_mat))
+    bc = spark.sparkContext.broadcast(
+        (pdf[id_col].to_numpy(), _unit_rows(pdf[vec_col]))
+    )
 
     def find(batches):
         ids_b, mat_b = bc.value
@@ -352,8 +332,7 @@ def cosine_dup_pairs(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            a_mat = np.stack(pdf[vec_col].to_numpy()).astype(np.float64)
-            a_mat /= np.maximum(np.linalg.norm(a_mat, axis=1, keepdims=True), 1e-12)
+            a_mat = _unit_rows(pdf[vec_col])
             sims32 = a_mat.astype(np.float32) @ mat_b32.T
             a_ids = pdf[id_col].to_numpy()
             ii, jj = np.nonzero(sims32 >= threshold - margin)

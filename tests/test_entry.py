@@ -58,3 +58,30 @@ def test_traced_spans_resolve(monkeypatch):
         for attr in qual.split("."):
             obj = getattr(obj, attr)
         assert callable(obj), f"{mod_name}.{qual} is not callable"
+
+
+def test_library_reads_every_parameter():
+    """Every parameter of every library `def` is read in its body: a
+    parameter nothing reads is a setting that silently does nothing.
+    Lambdas are exempt — a callback's arity is fixed by its caller."""
+    import ast
+
+    unread = []
+    for path in sorted((REPO / "refine_spark").glob("*.py")):
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            a = node.args
+            params = [*a.posonlyargs, *a.args, *a.kwonlyargs, a.vararg, a.kwarg]
+            read = {
+                n.id
+                for stmt in node.body
+                for n in ast.walk(stmt)
+                if isinstance(n, ast.Name) and isinstance(n.ctx, ast.Load)
+            }
+            unread += [
+                f"{path.stem}.{node.name}.{p.arg}"
+                for p in params
+                if p is not None and p.arg not in read
+            ]
+    assert not unread, f"parameters never read: {unread}"

@@ -95,13 +95,6 @@ def test_lsh_dup_pairs_recall(spark):
     assert len(found & planted) / len(planted) >= 0.9
     assert found <= exact  # verify step: no false positives
 
-    # the auto-switch: a tiny broadcast cap forces the LSH path
-    switched = {
-        (r["id_a"], r["id_b"])
-        for r in cosine_dup_pairs(df, threshold=0.95, broadcast_max_rows=10).collect()
-    }
-    assert switched <= exact
-
     # byte-aware gate (round-3): a byte budget that holds only 10 of the
     # 64-dim rows must route to the LSH path — output identical to a
     # direct lsh_dup_pairs call (same planes, same tables)
@@ -122,11 +115,25 @@ def test_lsh_dup_pairs_recall(spark):
 def test_broadcast_row_cap_math():
     from refine_spark.simsearch import _broadcast_row_cap
 
-    assert _broadcast_row_cap(768, None, 512 * 1024 * 1024) == (
+    assert _broadcast_row_cap(768, 512 * 1024 * 1024) == (
         512 * 1024 * 1024
     ) // (768 * 8)
-    assert _broadcast_row_cap(8, 123, 1) == 123  # explicit rows cap wins
-    assert _broadcast_row_cap(10**9, None, 1024) == 1  # never zero
+    assert _broadcast_row_cap(10**9, 1024) == 1  # never zero
+
+
+def test_probe_masks_cover_every_weight():
+    """Multi-probe masks: every distinct xor mask of hamming weight
+    <= radius, for radii past the hand-unrolled weights 1-3 too."""
+    from math import comb
+
+    from refine_spark.simsearch import _probe_masks
+
+    n = 10
+    for r in range(5):
+        masks = _probe_masks(n, r)
+        assert len(set(masks)) == len(masks)
+        assert all(bin(m).count("1") <= r for m in masks)
+        assert len(masks) == sum(comb(n, k) for k in range(r + 1))
 
 
 def test_simhash_nonascii_lockstep(spark):

@@ -158,6 +158,17 @@ def test_distributed_cc_matches_driver_path(spark):
     assert fast == dist
     assert fast["c"] == "a" and fast["f"] == "a" and fast["e"] == "d"
 
+    # a path longer than any fixed round budget: the loop must run to
+    # convergence, so every vertex ends up with the path's minimum id
+    path = spark.createDataFrame(
+        [(i, i + 1) for i in range(26)], "src long, dst long"
+    )
+    labels = {
+        r["url"]: r["cluster_id"]
+        for r in connected_components(path, driver_cutover=0).collect()
+    }
+    assert labels == {i: 0 for i in range(27)}
+
 
 def test_checkpoint_resume(spark, tmp_path):
     docs, _ = synth.to_spark(spark, n_docs=200)
@@ -269,7 +280,7 @@ def test_pairs_from_buckets_cap_contract(spark):
     assert len(want_hot) == cap * (cap - 1) // 2
     assert {p for p in out if p[0] >= 100} == {(100, 101), (100, 102), (101, 102)}
 
-    stats = bucket_cap_stats(keyed, "id", ["k"], cap).collect()[0]
+    stats = bucket_cap_stats(keyed, ["k"], cap).collect()[0]
     assert stats["n_buckets"] == 3  # key 4 is a singleton
     assert stats["n_capped"] == 1
     assert stats["est_dropped_pairs"] == n * (n - 1) // 2 - cap * (cap - 1) // 2

@@ -117,6 +117,45 @@ def test_rare_token_sim_bounds_and_symmetry(ta, tb):
         assert s1 == 1.0
 
 
+def test_rare_jvm_matches_python_reference(spark):
+    """The pipeline's Catalyst rare-token score against its pure-Python
+    reference over seeded random token sets, with zero weights and
+    subset pairs: equal within float rounding."""
+    import random
+
+    from refine_spark.scoring import _rare_jvm
+
+    rng = random.Random(17)
+    rows, want = [], []
+    for i in range(400):
+        # one corpus-wide weight per token, as the weight frame assigns
+        w = {t: rng.uniform(0.05, 3.0) for t in range(12)}
+        w.update({t: 0.0 for t in rng.sample(range(12), rng.randint(0, 3))})
+        ta = sorted(rng.sample(range(12), rng.randint(1, 6)))
+        if i % 4 == 0:  # subset pair
+            tb = sorted(rng.sample(ta, rng.randint(1, len(ta))))
+        else:
+            tb = sorted(rng.sample(range(12), rng.randint(1, 6)))
+        wa, wb = [w[t] for t in ta], [w[t] for t in tb]
+        rows.append((i, ta, wa, sum(wa), len(ta), tb, wb, sum(wb), len(tb)))
+        want.append(
+            _rare_token_sim(
+                ta, wa, tb, wb, DEFAULT.penalty_exp_few, DEFAULT.penalty_exp_many
+            )
+        )
+    df = spark.createDataFrame(
+        rows,
+        "i int, tids_a array<long>, ws_a array<double>, wsum_a double, ntok_a int,"
+        " tids_b array<long>, ws_b array<double>, wsum_b double, ntok_b int",
+    )
+    got = {
+        r["i"]: r["rare"]
+        for r in df.select("i", _rare_jvm(DEFAULT).alias("rare")).collect()
+    }
+    assert any(x == 0.0 for x in want) and any(x == 1.0 for x in want)
+    assert max(abs(got[i] - want[i]) for i in range(len(want))) <= 1e-12
+
+
 def test_normalize_for_shingles_accent_invariance():
     assert normalize_for_shingles("Vidéo Ação") == normalize_for_shingles("video acao")
 
