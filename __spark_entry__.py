@@ -282,7 +282,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # bit-parity gate: DuckDB recomputes the md5-based 60-bit
         # shingle-SimHash exactly (see signatures.token_hash60)
         docs = spread_small(_read(spark, sf, "documents").select("doc_id", "text"))
-        sh = make_simhash_udf(DedupConfig())
+        sh = make_simhash_udf()
         return docs.select("doc_id", sh(F.col("text")).alias("simhash"))
 
     q["simhash_fingerprints"] = simhash_fingerprints
@@ -293,7 +293,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the hamming ball (banding guarantee: hamming<=3 always shares a
         # 15-bit band, so the outputs must be identical)
         docs = _docs_as_pipeline_input(_read(spark, sf, "documents"))
-        sh = make_simhash_udf(DedupConfig())
+        sh = make_simhash_udf()
         # spread the narrow (url, text) projection before the per-doc
         # signature kernel: the few-MB documents scan is one partition,
         # which would serialize the whole UDF stage on one core. Then

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .config import DedupConfig, DEFAULT
+from .config import DEFAULT, LSH_BANDS, LSH_ROWS, DedupConfig
 
 
 def _pairs_from_buckets(
@@ -186,26 +186,23 @@ def materialize_pairs(
     return (F.broadcast(pairs) if hint else pairs), n
 
 
-def lsh_band_keys(
-    df: DataFrame,
-    cfg: DedupConfig = DEFAULT,
-    sig_col: str = "minhash",
-    id_col: str = "url",
-) -> DataFrame:
-    """Explode the MinHash signature into (band, band_key) rows, JVM-side.
+def lsh_band_keys(df: DataFrame, id_col: str = "url") -> DataFrame:
+    """Explode the `minhash` signature into (band, band_key) rows, JVM-side.
 
     `id_col` is the row identity carried through banding — the pipeline
     passes the int64 `doc_id` so the band shuffle moves 8-byte ids
     instead of full url strings (the measured bandwidth ceiling on
     shuffle-bound stages is partly payload-width; see pipeline.prepare)."""
-    r = cfg.lsh_rows
     banded = df.select(
         id_col,
-        sig_col,
-        F.explode(F.sequence(F.lit(0), F.lit(cfg.lsh_bands - 1))).alias("band"),
+        "minhash",
+        F.explode(F.sequence(F.lit(0), F.lit(LSH_BANDS - 1))).alias("band"),
     ).withColumn(
         "band_key",
-        F.xxhash64(F.col("band"), F.slice(F.col(sig_col), F.col("band") * r + 1, r)),
+        F.xxhash64(
+            F.col("band"),
+            F.slice(F.col("minhash"), F.col("band") * LSH_ROWS + 1, LSH_ROWS),
+        ),
     )
     return banded.select(id_col, "band", "band_key")
 
@@ -214,7 +211,7 @@ def lsh_candidates(
     docs_with_sig: DataFrame, cfg: DedupConfig = DEFAULT, id_col: str = "url"
 ) -> DataFrame:
     """Unique candidate id pairs from LSH band collisions."""
-    banded = lsh_band_keys(docs_with_sig.select(id_col, "minhash"), cfg, id_col=id_col)
+    banded = lsh_band_keys(docs_with_sig.select(id_col, "minhash"), id_col=id_col)
     return _pairs_from_buckets(banded, id_col, ["band", "band_key"], cfg.band_cap)
 
 

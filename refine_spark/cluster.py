@@ -23,7 +23,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
 from .candidates import count_and_est_bytes
-from .config import DedupConfig, DEFAULT
 
 
 def _numpy_min_label(src: np.ndarray, dst: np.ndarray):
@@ -76,6 +75,8 @@ def _driver_union_find(edges_pdf: pd.DataFrame, id_col: str, spark):
 # driver fast-path cutover shared by both CC entry points
 _DRIVER_MAX_ROWS = 2_000_000
 _DRIVER_MAX_BYTES = 768 * 1024 * 1024
+# salt fan-out of the distributed min-label reduce (hub-vertex skew)
+_SALT_BUCKETS = 16
 
 
 def _fits_driver(
@@ -92,7 +93,6 @@ def _fits_driver(
 def connected_components(
     edges: DataFrame,
     id_col: str = "url",
-    salt_buckets: int = 16,
     driver_cutover: int = _DRIVER_MAX_ROWS,
     driver_max_bytes: int = _DRIVER_MAX_BYTES,
 ) -> DataFrame:
@@ -140,7 +140,7 @@ def connected_components(
         candidates = msgs.union(own)
         # two-stage salted min to tame hub-vertex skew
         new_labels = (
-            candidates.withColumn("salt", F.pmod(F.xxhash64("label"), F.lit(salt_buckets)))
+            candidates.withColumn("salt", F.pmod(F.xxhash64("label"), F.lit(_SALT_BUCKETS)))
             .groupBy("id", "salt")
             .agg(F.min("label").alias("label"), F.min("own").alias("own"))
             .groupBy("id")
@@ -242,8 +242,7 @@ def sequential_cluster_ids(
 
 
 def name_pass_clusters(
-    name_edges: DataFrame, named: DataFrame, cfg: DedupConfig = DEFAULT,
-    id_col: str = "url",
+    name_edges: DataFrame, named: DataFrame, id_col: str = "url"
 ) -> tuple[DataFrame, DataFrame]:
     """Reference 'similar pass' output: (clusters, surviving_edges).
 
@@ -261,9 +260,7 @@ def name_pass_clusters(
     if _fits_driver(collected):
         return _name_pass_driver(collected, named, id_col)
 
-    labels = connected_components(
-        name_edges, id_col=id_col, salt_buckets=cfg.salt_buckets
-    )
+    labels = connected_components(name_edges, id_col=id_col)
     seq = sequential_cluster_ids(labels, named, id_col)
     kept_labels = labels.join(seq, "cluster_id", "left_anti")
     stats = cluster_stats(name_edges, kept_labels, id_col)

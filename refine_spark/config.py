@@ -1,5 +1,8 @@
-"""Algorithm constants, pinned for recall comparison with the reference.
+"""Algorithm constants, pinned for recall comparison with the reference,
+and the few settings a caller varies.
 
+The constants are module constants, not `DedupConfig` fields: no caller
+varies them, and the DuckDB oracles replay the MinHash/SimHash geometry.
 Reference cites (constants carried verbatim, see BASELINE.md):
   - sample size 4 KB, three-point: /root/reference/src/commands/dupes.rs:30-31,460-501
   - similarity threshold 0.7 clamped: dupes.rs:33-34,64-72
@@ -16,32 +19,33 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
+# --- reference-parity constants ---
+SAMPLE_KB = 4                   # dupes.rs:30-31
+THRESHOLD = 0.7                 # dupes.rs:33-34
+STRING_WEIGHT = 0.4             # dupes.rs:277-278
+RARE_TOKEN_WEIGHT = 0.6         # dupes.rs:277-278
+PENALTY_EXP_FEW = 0.6           # dupes.rs:453 (<=1 shared token)
+PENALTY_EXP_MANY = 1.0 / 3.0    # dupes.rs:453
+
+# --- MinHash / LSH (north-rule additions) ---
+SHINGLE_K = 3                   # word k-shingles over normalized text
+NUM_PERM = 128                  # MinHash permutations
+LSH_BANDS = 16                  # bands
+LSH_ROWS = 8                    # rows per band
+assert LSH_BANDS * LSH_ROWS == NUM_PERM
+
+# --- SimHash ---
+# 60 bits (not 64): the fingerprint is the low 60 bits of per-token
+# md5, so (a) it always fits a signed BIGINT in both Spark and DuckDB
+# (bit 63 never set -> no sign/overflow divergence between engines)
+# and (b) the driver's DuckDB oracle recomputes it bit-exactly.
+SIMHASH_BITS = 60
+SIMHASH_BANDS = 4               # 4 x 15-bit bands: hamming<=3 pairs
+SIMHASH_MAX_HAMMING = 3         # always share a full band (pigeonhole)
+
 
 @dataclass(frozen=True)
 class DedupConfig:
-    # --- reference-parity constants ---
-    sample_kb: int = 4              # dupes.rs:30-31
-    threshold: float = 0.7          # dupes.rs:33-34
-    string_weight: float = 0.4      # dupes.rs:277-278
-    rare_token_weight: float = 0.6  # dupes.rs:277-278
-    penalty_exp_few: float = 0.6    # dupes.rs:453 (<=1 shared token)
-    penalty_exp_many: float = 1.0 / 3.0  # dupes.rs:453
-
-    # --- MinHash / LSH (north-rule additions) ---
-    shingle_k: int = 3              # word k-shingles over normalized text
-    num_perm: int = 128             # MinHash permutations
-    lsh_bands: int = 16             # bands
-    lsh_rows: int = 8               # rows per band (bands*rows == num_perm)
-
-    # --- SimHash ---
-    # 60 bits (not 64): the fingerprint is the low 60 bits of per-token
-    # md5, so (a) it always fits a signed BIGINT in both Spark and DuckDB
-    # (bit 63 never set -> no sign/overflow divergence between engines)
-    # and (b) the driver's DuckDB oracle recomputes it bit-exactly.
-    simhash_bits: int = 60
-    simhash_bands: int = 4          # 4 x 15-bit bands: hamming<=3 pairs
-    simhash_max_hamming: int = 3    # always share a full band (pigeonhole)
-
     # --- suffix/substring pass (winnowing) ---
     min_substring: int = 256        # chars; FIXTURES.md family 4
     winnow_ngram: int = 64          # rolling-hash char n-gram size
@@ -55,15 +59,11 @@ class DedupConfig:
     # (64-bit hashes over 64-char grams); exact verify is for audits.
     exact_lcs_verify: bool = False
 
-    # --- skew / scale knobs ---
+    # --- skew knob ---
     band_cap: int = 2000            # max rows per LSH band key before capping (logged)
-    salt_buckets: int = 16          # salt fan-out for skewed group keys
 
     # --- determinism ---
     seed: int = 42
-
-    def __post_init__(self) -> None:
-        assert self.lsh_bands * self.lsh_rows == self.num_perm
 
 
 DEFAULT = DedupConfig()

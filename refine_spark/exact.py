@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window as W, functions as F
 
-from .config import DedupConfig, DEFAULT
+from .config import SAMPLE_KB
 
 
 def three_point_sample(html: Column, sample_bytes: int) -> Column:
@@ -45,6 +45,11 @@ def three_point_sample(html: Column, sample_bytes: int) -> Column:
     )
 
 
+def _sample_hash(html: Column) -> Column:
+    """sha2-256 of the SAMPLE_KB 3-point sample: the exact pass's group key."""
+    return F.sha2(three_point_sample(html, SAMPLE_KB * 1024), 256)
+
+
 def with_size_kind(docs: DataFrame) -> DataFrame:
     """size = byte length of html; kind = lang (the document analog of the
     reference's media-kind, SURVEY.md §1.2)."""
@@ -53,9 +58,7 @@ def with_size_kind(docs: DataFrame) -> DataFrame:
     )
 
 
-def exact_dup_groups(
-    docs: DataFrame, cfg: DedupConfig = DEFAULT, id_col: str = "url"
-) -> DataFrame:
+def exact_dup_groups(docs: DataFrame, id_col: str = "url") -> DataFrame:
     """Return (id, size, kind, sample_hash, group_size) for exact-dup rows.
 
     The sample hash is computed map-side on the narrow projection, so the
@@ -74,9 +77,7 @@ def exact_dup_groups(
             id_col,
             "size",
             "kind",
-            F.sha2(
-                three_point_sample(F.col("html"), cfg.sample_kb * 1024), 256
-            ).alias("sample_hash"),
+            _sample_hash(F.col("html")).alias("sample_hash"),
         )
     wg = W.partitionBy("size", "kind", "sample_hash")
     return (
@@ -86,12 +87,10 @@ def exact_dup_groups(
     )
 
 
-def exact_edges(
-    docs: DataFrame, cfg: DedupConfig = DEFAULT, id_col: str = "url"
-) -> DataFrame:
+def exact_edges(docs: DataFrame, id_col: str = "url") -> DataFrame:
     """Star edges (member -> group representative) for the global clustering
     pass; sim = 1.0 by definition of exact equality."""
-    groups = exact_dup_groups(docs, cfg, id_col)
+    groups = exact_dup_groups(docs, id_col)
     wg = W.partitionBy("size", "kind", "sample_hash")
     with_rep = groups.withColumn("rep", F.min(id_col).over(wg))
     return (

@@ -21,16 +21,16 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 
 
-def spread_small(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
-    """Repartition `df` to `min_partitions` (default: defaultParallelism)
-    iff it currently has fewer partitions; identity otherwise.
+def spread_small(df: DataFrame) -> DataFrame:
+    """Repartition `df` to defaultParallelism iff it currently has fewer
+    partitions; identity otherwise.
 
     Call it on the narrow projection feeding a per-row-expensive Python
     stage (select the needed columns FIRST so the one extra shuffle, when
     it happens, moves only those bytes). Row-wise results are unchanged —
     only placement and output order differ.
     """
-    target = min_partitions or df.sparkSession.sparkContext.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() >= target:
         return df
     return df.repartition(target)

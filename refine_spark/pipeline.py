@@ -26,9 +26,9 @@ from .candidates import (
 )
 from .clean import with_cleaned_name
 from .cluster import cluster_stats, connected_components, name_pass_clusters
-from .config import DedupConfig, DEFAULT
+from .config import DedupConfig, DEFAULT, NUM_PERM, THRESHOLD
 from .checkpoint import StageRunner
-from .exact import exact_edges, with_size_kind
+from .exact import _sample_hash, exact_edges, with_size_kind
 from .scan import with_identity_columns
 from .scoring import name_pass_edges
 from .signatures import (
@@ -42,17 +42,17 @@ def minhash_edges(
 ) -> DataFrame:
     """LSH candidates verified by the signature-estimated Jaccard — pure
     JVM expression over the two signatures (no text shuffle, no UDF):
-    est = |matching positions| / num_perm.
+    est = |matching positions| / NUM_PERM.
 
     Verify-join cost model (round 4): the candidate-pair side is
     byte-small (two int64s) while each signature row is ~1 KB
-    (num_perm longs) — broadcasting the pairs keeps the first signature
+    (NUM_PERM longs) — broadcasting the pairs keeps the first signature
     attach map-side (signatures scanned, not shuffled), and the
     positions compare on int32 VIEWS of the signature (cast truncation),
     halving the bytes of the remaining shuffle. Position equality on the
     low 32 bits is the same unbiased Jaccard estimator with a 2^-32
     false-equality term per position — invisible next to the estimator's
-    own 1/sqrt(num_perm) noise. The stored signatures stay full-width
+    own 1/sqrt(NUM_PERM) noise. The stored signatures stay full-width
     (banding and any external consumer see unchanged values)."""
     cands = lsh_candidates(docs_with_sig, cfg, id_col=id_col)
     cands, _ = materialize_pairs(cands)
@@ -72,13 +72,13 @@ def minhash_edges(
                 lambda m: m,
             )
         )
-        / F.lit(cfg.num_perm)
+        / F.lit(NUM_PERM)
     ).cast("double")
     return (
         cands.join(a, "src")
         .join(b, "dst")
         .withColumn("sim", est)
-        .filter(F.col("sim") >= cfg.threshold)
+        .filter(F.col("sim") >= THRESHOLD)
         .select("src", "dst", "sim", F.lit("text").alias("pass_name"))
     )
 
@@ -105,7 +105,7 @@ def _log_cap_stats(runner: StageRunner, stage: str, stats_df: DataFrame) -> None
     )
 
 
-def prepare(docs: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
+def prepare(docs: DataFrame) -> DataFrame:
     """Identity + cleaned-name + size/kind projection (computed once),
     plus `doc_id` = xxhash64(url): the compact int64 row identity every
     pair-generation / scoring / clustering stage shuffles instead of the
@@ -126,12 +126,7 @@ def prepare(docs: DataFrame, cfg: DedupConfig = DEFAULT) -> DataFrame:
         # html payload: it is the dominant byte weight of the corpus and
         # nothing downstream needs it — keeping it would make the base
         # localCheckpoint (which every pass re-reads) a payload copy
-        from .exact import three_point_sample
-
-        base = base.withColumn(
-            "sample_hash",
-            F.sha2(three_point_sample(F.col("html"), cfg.sample_kb * 1024), 256),
-        ).drop("html")
+        base = base.withColumn("sample_hash", _sample_hash(F.col("html"))).drop("html")
     return base
 
 
@@ -162,34 +157,44 @@ def verify_doc_ids(base: DataFrame) -> None:
         )
 
 
+# the edge passes run_dedup knows: its default and its allowed set
+PASSES = ("exact", "text", "simhash", "name", "substring")
+
+
 def run_dedup(
     spark: SparkSession,
     docs: DataFrame,
     cfg: DedupConfig = DEFAULT,
     checkpoint_dir: str | None = None,
-    passes: tuple[str, ...] = ("exact", "text", "simhash", "name", "substring"),
+    passes: tuple[str, ...] = PASSES,
     lazy: bool = False,
 ) -> dict:
-    """Run the full pipeline; returns dict with clusters/edges/metrics.
+    """Run the full pipeline; returns dict with base/edges/clusters/metrics.
+
+    `passes` is a non-empty subset of PASSES; anything else raises
+    ValueError before any Spark job runs.
 
     lazy=True (bench path): only reused intermediates materialize; the
     four edge passes evaluate together inside the union's single job —
     fewer barriers, better cluster utilization. Default keeps one
     materialization + metrics row per stage (the resumable shape)."""
+    if not passes or not set(passes) <= set(PASSES):
+        raise ValueError(
+            f"passes must be a non-empty subset of {PASSES}, got {tuple(passes)}"
+        )
     runner = StageRunner(spark, checkpoint_dir, lazy=lazy)
 
-    base = prepare(docs, cfg).localCheckpoint()
+    base = prepare(docs).localCheckpoint()
     verify_doc_ids(base)
     # every edge pass below shuffles the 8-byte doc_id, never the url;
     # this map re-attaches urls exactly once, at cluster emission
     ids = base.select("doc_id", "url")
 
     edge_frames: list[DataFrame] = []
-    name_clusters = None
 
     if "exact" in passes:
         edge_frames.append(
-            runner.run("exact_edges", lambda: exact_edges(base, cfg, id_col="doc_id"))
+            runner.run("exact_edges", lambda: exact_edges(base, id_col="doc_id"))
         )
 
     if "text" in passes or "simhash" in passes:
@@ -209,7 +214,7 @@ def run_dedup(
                 runner,
                 "text_edges_cap",
                 bucket_cap_stats(
-                    lsh_band_keys(signed, cfg, id_col="doc_id"),
+                    lsh_band_keys(signed, id_col="doc_id"),
                     ["band", "band_key"], cfg.band_cap,
                 ),
             )
@@ -226,9 +231,7 @@ def run_dedup(
                 runner,
                 "simhash_edges_cap",
                 bucket_cap_stats(
-                    simhash_band_keys(
-                        _simhash_reps(signed, "doc_id"), cfg, id_col="doc_id"
-                    ),
+                    simhash_band_keys(_simhash_reps(signed, "doc_id"), id_col="doc_id"),
                     ["band", "band_key"], cfg.band_cap,
                 ),
             )
@@ -238,17 +241,11 @@ def run_dedup(
         raw_name_edges = runner.run(
             "name_edges_raw",
             # weighted prefix filtering (exact) + shared weight frame
-            lambda: name_pass_edges(named, cfg, id_col="doc_id"),
+            lambda: name_pass_edges(named, id_col="doc_id"),
             reused=True,  # feeds name CC and the surviving-edge semi-join
         )
-        name_clusters, surviving = name_pass_clusters(
-            raw_name_edges, named, cfg, id_col="doc_id"
-        )
-        surviving = runner.run("name_edges", lambda: surviving)
-        edge_frames.append(surviving)
-        name_clusters = _relabel_by_url(
-            name_clusters, ids, ["avg_sim", "n_edges", "cluster_size"]
-        )
+        _, surviving = name_pass_clusters(raw_name_edges, named, id_col="doc_id")
+        edge_frames.append(runner.run("name_edges", lambda: surviving))
 
     if "substring" in passes:
         edge_frames.append(
@@ -271,9 +268,7 @@ def run_dedup(
         all_edges = all_edges.unionByName(e)
     all_edges = runner.run("edges", lambda: all_edges, reused=True)
 
-    labels = connected_components(
-        all_edges, id_col="doc_id", salt_buckets=cfg.salt_buckets
-    )
+    labels = connected_components(all_edges, id_col="doc_id")
     stats = cluster_stats(all_edges, labels, id_col="doc_id")
     with_stats = labels.join(stats, "cluster_id").select(
         "doc_id", "cluster_id", "avg_sim", F.col("cluster_size").cast("int")
@@ -287,7 +282,6 @@ def run_dedup(
         "base": base,
         "edges": all_edges,
         "clusters": clusters,
-        "name_clusters": name_clusters,
         "metrics": runner.metrics,
     }
 

@@ -26,7 +26,9 @@ from collections import Counter
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F, types as T
 
-from .config import DedupConfig, DEFAULT
+from .config import (
+    PENALTY_EXP_FEW, PENALTY_EXP_MANY, RARE_TOKEN_WEIGHT, STRING_WEIGHT, THRESHOLD,
+)
 from .candidates import materialize_pairs
 
 
@@ -86,7 +88,7 @@ def _dice_udf(name_a: pd.Series, name_b: pd.Series) -> pd.Series:
     )
 
 
-def _rare_jvm(cfg: DedupConfig):
+def _rare_jvm():
     """rare_token_similarity as pure Catalyst higher-order expressions
     over integer token ids (arrays distinct + sorted; weights aligned,
     weight sums precomputed). The same math as _rare_token_sim / the
@@ -109,21 +111,21 @@ def _rare_jvm(cfg: DedupConfig):
     la = F.col("ntok_a").cast("double")
     lb = F.col("ntok_b").cast("double")
     ratio = F.least(la, lb) / F.greatest(la, lb)
-    exponent = F.when(n_inter <= 1, F.lit(cfg.penalty_exp_few)).otherwise(
-        F.lit(cfg.penalty_exp_many)
+    exponent = F.when(n_inter <= 1, F.lit(PENALTY_EXP_FEW)).otherwise(
+        F.lit(PENALTY_EXP_MANY)
     )
     rare = base * F.pow(ratio, exponent)
     return F.when((a_score == 0.0) | (b_score == 0.0), F.lit(0.0)).otherwise(rare)
 
 
-def _weight_frame(named: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
+def _weight_frame(named: DataFrame, id_col: str) -> DataFrame:
     """One row per (id, distinct token): w = 1/ln(1+freq) from the
     corpus-wide token frequency (with multiplicity, dupes.rs:158-165),
     the doc's weight sum `wsum`, and `in_prefix` — the weighted prefix
     filter that blocks the name pass.
 
     Any pair the scorer can accept satisfies
-        rare >= bound = (threshold - string_weight) / rare_token_weight
+        rare >= bound = (THRESHOLD - STRING_WEIGHT) / RARE_TOKEN_WEIGHT
     (sim = max(lev, dice)*sw + rare*rw with max(...) <= 1), and
     rare <= inter_score / min(wsum), so the shared-token weight must be
     >= bound * min(wsum_a, wsum_b). Hence the smaller side must share a
@@ -136,7 +138,7 @@ def _weight_frame(named: DataFrame, cfg: DedupConfig, id_col: str) -> DataFrame:
     which scales; at test sizes Catalyst broadcasts it."""
     from pyspark.sql import Window as W
 
-    bound = (cfg.threshold - cfg.string_weight) / cfg.rare_token_weight
+    bound = (THRESHOLD - STRING_WEIGHT) / RARE_TOKEN_WEIGHT
     tok = named.select(id_col, F.explode(F.array_distinct("tokens")).alias("token"))
     freq = (
         named.select(F.explode("tokens").alias("token"))
@@ -191,9 +193,7 @@ def _weight_arrays(flagged: DataFrame, id_col: str) -> DataFrame:
     )
 
 
-def name_pass_edges(
-    named: DataFrame, cfg: DedupConfig = DEFAULT, id_col: str = "url"
-) -> DataFrame:
+def name_pass_edges(named: DataFrame, id_col: str = "url") -> DataFrame:
     """The full name pass with ONE token-weight computation shared
     between candidate generation and scoring.
 
@@ -206,7 +206,7 @@ def name_pass_edges(
     (score_name_pairs over candidates.token_block_candidates) — pinned
     by tests/test_pipeline.py."""
     # materialized once: feeds candidates AND the arrays
-    flagged = _weight_frame(named, cfg, id_col).localCheckpoint(eager=True)
+    flagged = _weight_frame(named, id_col).localCheckpoint(eager=True)
     probe = flagged.filter("in_prefix").select(F.col(id_col).alias("pu"), "token")
     index = flagged.select(F.col(id_col).alias("iu"), "token")
     pairs = (
@@ -218,15 +218,10 @@ def name_pass_edges(
         .dropDuplicates(["src", "dst"])
     )
     tokw = _weight_arrays(flagged, id_col)
-    return _score_pairs_with_weights(pairs, named, tokw, cfg, id_col=id_col)
+    return _score_pairs_with_weights(pairs, named, tokw, id_col)
 
 
-def score_name_pairs(
-    pairs: DataFrame,
-    named: DataFrame,
-    cfg: DedupConfig = DEFAULT,
-    id_col: str = "url",
-) -> DataFrame:
+def score_name_pairs(pairs: DataFrame, named: DataFrame) -> DataFrame:
     """Score candidate pairs; emit qualifying edges (src, dst, sim, 'name').
 
     `named` needs (url, cleaned_name, tokens, kind).
@@ -241,18 +236,14 @@ def score_name_pairs(
          0.4 + rare*0.6 < t (dice <= 1) — only the narrow middle band
          pays the bigram-multiset dice pandas UDF.
     """
-    tokw = _weight_arrays(_weight_frame(named, cfg, id_col), id_col)
-    return _score_pairs_with_weights(pairs, named, tokw, cfg, id_col=id_col)
+    tokw = _weight_arrays(_weight_frame(named, "url"), "url")
+    return _score_pairs_with_weights(pairs, named, tokw, "url")
 
 
 def _score_pairs_with_weights(
-    pairs: DataFrame,
-    named: DataFrame,
-    tokw: DataFrame,
-    cfg: DedupConfig = DEFAULT,
-    id_col: str = "url",
+    pairs: DataFrame, named: DataFrame, tokw: DataFrame, id_col: str
 ) -> DataFrame:
-    sw, rw, t = cfg.string_weight, cfg.rare_token_weight, cfg.threshold
+    sw, rw, t = STRING_WEIGHT, RARE_TOKEN_WEIGHT, THRESHOLD
     # The candidate-pair table is huge (every token-block pair), so the
     # big join carries only the MINIMAL payload per side: kind + distinct
     # tokens + weights. Names attach after the prune (the pruned band is
@@ -278,7 +269,7 @@ def _score_pairs_with_weights(
             F.arrays_overlap("nonnum_a", "nonnum_b")
         )
     )
-    scored = joined.withColumn("rare", _rare_jvm(cfg))
+    scored = joined.withColumn("rare", _rare_jvm())
     # prune with the dice-free bound (lev <= 1, dice <= 1): only survivors
     # — passing pairs plus the narrow undecided band — continue. The
     # materialization also stops Catalyst re-evaluating the interpreted

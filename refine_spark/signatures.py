@@ -8,7 +8,7 @@ Both are vectorized pandas UDFs over Arrow batches (numpy inner loops, no
 per-row Python in the hot path beyond stable shingle hashing).
 
 MinHash: word k-shingles of normalized text, hashed to 64-bit ints; the
-signature is min over `num_perm` universal-hash permutations
+signature is min over NUM_PERM universal-hash permutations
 ((a*x + b) mod p, p = 2^61-1).  LSH banding (bands x rows) happens
 JVM-side in candidates.py via xxhash64 over signature slices.
 """
@@ -22,7 +22,10 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F, types as T
 
-from .config import DedupConfig, DEFAULT
+from .config import (
+    DEFAULT, NUM_PERM, SHINGLE_K, SIMHASH_BANDS, SIMHASH_BITS, SIMHASH_MAX_HAMMING,
+    DedupConfig,
+)
 from .clean import _translit_str
 
 _MERSENNE = (1 << 61) - 1
@@ -31,8 +34,8 @@ _TOKEN_RE = re.compile(r"[a-z0-9]+")
 
 def _perm_params(cfg: DedupConfig) -> tuple[np.ndarray, np.ndarray]:
     rng = np.random.RandomState(cfg.seed)
-    a = rng.randint(1, _MERSENNE, size=cfg.num_perm, dtype=np.int64).astype(np.uint64)
-    b = rng.randint(0, _MERSENNE, size=cfg.num_perm, dtype=np.int64).astype(np.uint64)
+    a = rng.randint(1, _MERSENNE, size=NUM_PERM, dtype=np.int64).astype(np.uint64)
+    b = rng.randint(0, _MERSENNE, size=NUM_PERM, dtype=np.int64).astype(np.uint64)
     return a, b
 
 
@@ -83,15 +86,14 @@ def _simhash_from_uniq(uniq: np.ndarray, counts: np.ndarray, bits: int) -> int:
     return int(((acc > 0).astype(np.uint64) << np.arange(bits, dtype=np.uint64)).sum())
 
 
-def make_minhash_udf(cfg: DedupConfig = DEFAULT):
-    a, b = _perm_params(cfg)
-    k = cfg.shingle_k
+def make_minhash_udf():
+    a, b = _perm_params(DEFAULT)
 
     @F.pandas_udf(T.ArrayType(T.LongType()))
     def minhash_udf(texts: pd.Series) -> pd.Series:
         results = []
         for text in texts:
-            uniq = np.unique(_shingle_hashes60(normalize_for_shingles(text), k))
+            uniq = np.unique(_shingle_hashes60(normalize_for_shingles(text), SHINGLE_K))
             results.append(_minhash_from_uniq(uniq, a, b))
         return pd.Series(results)
 
@@ -116,24 +118,22 @@ def _shingle_strings(tokens: list[str], k: int) -> list[str]:
     return [" ".join(tokens[i : i + k]) for i in range(len(tokens) - k + 1)]
 
 
-def make_simhash_udf(cfg: DedupConfig = DEFAULT):
+def make_simhash_udf():
     """SimHash over word k-shingle features (not unigram bags): the
-    fingerprint is order-sensitive, so hamming <= simhash_max_hamming
+    fingerprint is order-sensitive, so hamming <= SIMHASH_MAX_HAMMING
     means near-identical text, not merely similar token frequencies —
     bag-of-words look-alikes built from a shared hot vocabulary do not
     collide. This is the classic web-dedup configuration."""
-    bits = cfg.simhash_bits
-    k = cfg.shingle_k
 
     @F.pandas_udf(T.LongType())
     def simhash_udf(texts: pd.Series) -> pd.Series:
         out = np.zeros(len(texts), dtype=np.int64)
         for idx, text in enumerate(texts):
             uniq, counts = np.unique(
-                _shingle_hashes60(normalize_for_shingles(text), k),
+                _shingle_hashes60(normalize_for_shingles(text), SHINGLE_K),
                 return_counts=True,
             )
-            out[idx] = _simhash_from_uniq(uniq, counts, bits)
+            out[idx] = _simhash_from_uniq(uniq, counts, SIMHASH_BITS)
         return pd.Series(out)
 
     return simhash_udf
@@ -144,27 +144,25 @@ def hamming_distance(col_a, col_b):
     return F.bit_count(col_a.bitwiseXOR(col_b))
 
 
-def simhash_band_keys(
-    df, cfg: DedupConfig = DEFAULT, sig_col: str = "simhash", id_col: str = "url"
-):
-    """Explode the fingerprint into (band, band_key) rows, JVM-side.
+def simhash_band_keys(df, id_col: str = "url"):
+    """Explode the `simhash` fingerprint into (band, band_key) rows, JVM-side.
 
-    Bit-sliced banding: `simhash_bands` equal slices of the fingerprint.
+    Bit-sliced banding: SIMHASH_BANDS equal slices of the fingerprint.
     Pigeonhole guarantee: any pair within hamming distance
-    <= simhash_bands - 1 (>= simhash_max_hamming by config) shares at
-    least one slice exactly, so the equi-join on (band, band_key) has no
-    false negatives for the hamming ball the verify step accepts."""
-    width = cfg.simhash_bits // cfg.simhash_bands
+    <= SIMHASH_BANDS - 1 (>= SIMHASH_MAX_HAMMING) shares at least one
+    slice exactly, so the equi-join on (band, band_key) has no false
+    negatives for the hamming ball the verify step accepts."""
+    width = SIMHASH_BITS // SIMHASH_BANDS
     mask = (1 << width) - 1
     banded = df.select(
         id_col,
-        sig_col,
-        F.explode(F.sequence(F.lit(0), F.lit(cfg.simhash_bands - 1))).alias("band"),
+        "simhash",
+        F.explode(F.sequence(F.lit(0), F.lit(SIMHASH_BANDS - 1))).alias("band"),
     ).withColumn(
         "band_key",
         # shiftright() only takes a literal shift in the Python API;
         # the SQL form accepts a column expression
-        F.expr(f"shiftright({sig_col}, band * {width})").bitwiseAND(F.lit(mask)),
+        F.expr(f"shiftright(simhash, band * {width})").bitwiseAND(F.lit(mask)),
     )
     return banded.select(id_col, "band", "band_key")
 
@@ -193,7 +191,7 @@ def simhash_edges(
     than band_cap DISTINCT fingerprints share a band slice, and that
     truncation is surfaced by the pipeline's cap accounting over the same
     rep frame (_simhash_reps), not silent. Verify is a
-    pure JVM bit_count(xor) <= simhash_max_hamming over representative
+    pure JVM bit_count(xor) <= SIMHASH_MAX_HAMMING over representative
     fingerprints — no text, no Python. sim = 1 - hamming/bits.
 
     expand="pairs" (default): full (src < dst) pair semantics matching the
@@ -214,7 +212,7 @@ def simhash_edges(
     # of re-aggregating the corpus in every subplan
     reps = _simhash_reps(sigs, id_col).localCheckpoint(eager=True)
 
-    banded = simhash_band_keys(reps, cfg, id_col=id_col)
+    banded = simhash_band_keys(reps, id_col=id_col)
     rep_pairs = _pairs_from_buckets(banded, id_col, ["band", "band_key"], cfg.band_cap)
     a = reps.select(F.col(id_col).alias("src"), F.col("simhash").alias("sh_a"))
     b = reps.select(F.col(id_col).alias("dst"), F.col("simhash").alias("sh_b"))
@@ -222,13 +220,11 @@ def simhash_edges(
         rep_pairs.join(a, "src")
         .join(b, "dst")
         .withColumn("ham", hamming_distance(F.col("sh_a"), F.col("sh_b")))
-        .filter(F.col("ham") <= cfg.simhash_max_hamming)
-        .select("sh_a", "sh_b", "ham")
+        .filter(F.col("ham") <= SIMHASH_MAX_HAMMING)
+        .select("src", "dst", "sh_a", "sh_b", "ham")
     )
 
-    sim_expr = (
-        F.lit(1.0) - F.col("ham") / F.lit(float(cfg.simhash_bits))
-    ).alias("sim")
+    sim_expr = (F.lit(1.0) - F.col("ham") / F.lit(float(SIMHASH_BITS))).alias("sim")
     pass_col = F.lit("simhash").alias("pass_name")
 
     if expand == "star":
@@ -246,17 +242,9 @@ def simhash_edges(
                 F.lit(0).alias("ham"),
             )
         )
-        cross = rep_edges.join(
-            reps.select(F.col("simhash").alias("sh_a"), F.col(id_col).alias("ra")),
-            "sh_a",
-        ).join(
-            reps.select(F.col("simhash").alias("sh_b"), F.col(id_col).alias("rb")),
-            "sh_b",
-        ).select(
-            F.least("ra", "rb").alias("src"),
-            F.greatest("ra", "rb").alias("dst"),
-            "ham",
-        )
+        # a rep is the min member id of exactly one fingerprint, so the
+        # rep pair (src < dst) already is the rep->rep edge
+        cross = rep_edges.select("src", "dst", "ham")
         return intra.unionByName(cross).select("src", "dst", sim_expr, pass_col)
 
     # expand == "pairs": exact hamming-ball pair semantics
@@ -288,8 +276,6 @@ def make_signatures_udf(cfg: DedupConfig = DEFAULT):
     Outputs are bit-identical to the standalone kernels (pinned by
     tests/test_pipeline.py::test_fused_signatures_match)."""
     a, b = _perm_params(cfg)
-    k = cfg.shingle_k
-    bits = cfg.simhash_bits
 
     @F.pandas_udf("minhash array<long>, simhash long")
     def signatures_udf(texts: pd.Series) -> pd.DataFrame:
@@ -298,19 +284,19 @@ def make_signatures_udf(cfg: DedupConfig = DEFAULT):
             # ONE md5 per shingle feeds both signatures; all remaining
             # per-doc work is C-level numpy over the uint64 hash array
             uniq, counts = np.unique(
-                _shingle_hashes60(normalize_for_shingles(text), k),
+                _shingle_hashes60(normalize_for_shingles(text), SHINGLE_K),
                 return_counts=True,
             )
             mins.append(_minhash_from_uniq(uniq, a, b))
-            sims.append(_simhash_from_uniq(uniq, counts, bits))
+            sims.append(_simhash_from_uniq(uniq, counts, SIMHASH_BITS))
         return pd.DataFrame({"minhash": mins, "simhash": sims})
 
     return signatures_udf
 
 
-def with_signatures(docs, cfg: DedupConfig = DEFAULT, text_col: str = "text"):
+def with_signatures(docs, cfg: DedupConfig = DEFAULT):
     """Attach `minhash` (array<long>) and `simhash` (long) columns —
-    one fused Arrow pass over the text."""
+    one fused Arrow pass over the `text` column."""
     from .partitioning import spread_small
 
     # hottest Python kernel in the repo: never let a byte-small
@@ -318,7 +304,7 @@ def with_signatures(docs, cfg: DedupConfig = DEFAULT, text_col: str = "text"):
     docs = spread_small(docs)
     sig = make_signatures_udf(cfg)
     return (
-        docs.withColumn("_sig", sig(F.col(text_col)))
+        docs.withColumn("_sig", sig(F.col("text")))
         .withColumn("minhash", F.col("_sig.minhash"))
         .withColumn("simhash", F.col("_sig.simhash"))
         .drop("_sig")

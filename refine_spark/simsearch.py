@@ -22,7 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import Column, DataFrame, functions as F, types as T
 
-from .config import DedupConfig, DEFAULT
+from .config import DEFAULT
 
 
 def dot(a: Column, b: Column) -> Column:
@@ -49,22 +49,20 @@ def _unit_rows(vecs: pd.Series) -> np.ndarray:
     return mat
 
 
-def _broadcast_matrix(df: DataFrame, id_col: str, vec_col: str):
+def _broadcast_matrix(df: DataFrame):
     """Collect the SMALL side to a normalized numpy matrix and broadcast it.
 
     Only ever called on the side that is small by construction (the query
     set, or a corpus that fits one executor); the big side streams through
     mapInPandas and never shuffles."""
-    pdf = df.select(id_col, vec_col).toPandas()
-    return pdf[id_col].to_numpy(), _unit_rows(pdf[vec_col])
+    pdf = df.select("vec_id", "embedding").toPandas()
+    return pdf["vec_id"].to_numpy(), _unit_rows(pdf["embedding"])
 
 
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 10,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact cosine top-k per query. Returns (query_id, vec_id, rank).
 
@@ -75,7 +73,7 @@ def brute_force_topk(
     from pyspark.sql import Window as W
 
     spark = corpus.sparkSession
-    q_ids, q_mat = _broadcast_matrix(queries, id_col, vec_col)
+    q_ids, q_mat = _broadcast_matrix(queries)
     bc = spark.sparkContext.broadcast((q_ids, q_mat))
 
     def score(batches):
@@ -83,8 +81,8 @@ def brute_force_topk(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            sims = _unit_rows(pdf[vec_col]) @ mat_q.T  # (batch, n_queries)
-            c_ids = pdf[id_col].to_numpy()
+            sims = _unit_rows(pdf["embedding"]) @ mat_q.T  # (batch, n_queries)
+            c_ids = pdf["vec_id"].to_numpy()
             out_q, out_c, out_s = [], [], []
             for j in range(len(ids_q)):
                 col = np.where(c_ids == ids_q[j], -np.inf, sims[:, j])
@@ -94,19 +92,19 @@ def brute_force_topk(
                 out_c.extend(c_ids[cand])
                 out_s.extend(col[cand])
             yield pd.DataFrame(
-                {"query_id": out_q, id_col: out_c, "cos": out_s}
+                {"query_id": out_q, "vec_id": out_c, "cos": out_s}
             )
 
     from .partitioning import spread_small
 
-    cand = spread_small(corpus.select(id_col, vec_col)).mapInPandas(
-        score, f"query_id long, {id_col} long, cos double"
+    cand = spread_small(corpus.select("vec_id", "embedding")).mapInPandas(
+        score, "query_id long, vec_id long, cos double"
     )
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.col(id_col))
+    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.col("vec_id"))
     return (
         cand.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "rank")
+        .select("query_id", "vec_id", "rank")
     )
 
 
@@ -183,8 +181,6 @@ def lsh_topk(
     k: int = 10,
     n_planes: int = 12,
     probe_radius: int = 0,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
 ) -> DataFrame:
     """Approximate top-k: random-hyperplane bucket equi-join, then exact
     cosine rerank within the bucket. Recall rises with fewer planes
@@ -197,11 +193,11 @@ def lsh_topk(
     from .partitioning import spread_small
 
     bucket = make_hyperplane_udf(dim, n_planes)
-    c = spread_small(corpus.select(id_col, vec_col)).withColumn(
-        "bucket", bucket(F.col(vec_col))
+    c = spread_small(corpus.select("vec_id", "embedding")).withColumn(
+        "bucket", bucket(F.col("embedding"))
     )
     q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
+        F.col("vec_id").alias("query_id"), F.col("embedding").alias("qvec")
     ).withColumn("bucket0", bucket(F.col("qvec")))
     masks = F.array(*[F.lit(m) for m in _probe_masks(n_planes, probe_radius)])
     q = q.select(
@@ -213,26 +209,23 @@ def lsh_topk(
     )
     joined = (
         c.join(q, "bucket")
-        .filter(F.col("query_id") != F.col(id_col))
-        .dropDuplicates(["query_id", id_col])  # multi-probe re-finds pairs
+        .filter(F.col("query_id") != F.col("vec_id"))
+        .dropDuplicates(["query_id", "vec_id"])  # multi-probe re-finds pairs
     )
-    scored = joined.withColumn("cos", cosine(F.col("qvec"), F.col(vec_col)))
-    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.col(id_col))
+    scored = joined.withColumn("cos", cosine(F.col("qvec"), F.col("embedding")))
+    w = W.partitionBy("query_id").orderBy(F.desc("cos"), F.col("vec_id"))
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", id_col, "rank")
+        .select("query_id", "vec_id", "rank")
     )
 
 
 def lsh_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     n_planes: int = 10,
     n_tables: int = 8,
-    cfg: DedupConfig = DEFAULT,
     dim: int | None = None,
 ) -> DataFrame:
     """Scale path for embedding near-dup pairs: OR-amplified multi-table
@@ -245,18 +238,18 @@ def lsh_dup_pairs(
     from .candidates import _pairs_from_buckets
 
     if dim is None:
-        dim = len(embeddings.select(vec_col).first()[0])
+        dim = len(embeddings.select("embedding").first()[0])
     # ONE fused bucketing pass over the corpus (round-3 ran a separate
     # UDF scan per table — n_tables corpus reads + Arrow round-trips);
     # posexplode recovers the (table, bucket) banding rows
     buckets = make_multitable_hyperplane_udf(dim, n_planes, n_tables)
     banded = embeddings.select(
-        id_col, F.posexplode(buckets(F.col(vec_col))).alias("tbl", "bucket")
+        "vec_id", F.posexplode(buckets(F.col("embedding"))).alias("tbl", "bucket")
     )
-    pairs = _pairs_from_buckets(banded, id_col, ["tbl", "bucket"], cfg.band_cap)
+    pairs = _pairs_from_buckets(banded, "vec_id", ["tbl", "bucket"], DEFAULT.band_cap)
     pairs = pairs.select(F.col("src").alias("id_a"), F.col("dst").alias("id_b"))
-    a = embeddings.select(F.col(id_col).alias("id_a"), F.col(vec_col).alias("vec_a"))
-    b = embeddings.select(F.col(id_col).alias("id_b"), F.col(vec_col).alias("vec_b"))
+    a = embeddings.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("vec_a"))
+    b = embeddings.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vec_b"))
     return (
         pairs.join(a, "id_a")
         .join(b, "id_b")
@@ -277,10 +270,6 @@ def _broadcast_row_cap(dim: int, driver_budget_bytes: int) -> int:
 def cosine_dup_pairs(
     embeddings: DataFrame,
     threshold: float = 0.95,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cfg: DedupConfig = DEFAULT,
-    dim: int | None = None,
     driver_budget_bytes: int = 512 * 1024 * 1024,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs (id_a < id_b, cos >= t).
@@ -295,24 +284,21 @@ def cosine_dup_pairs(
     collects limit(cap+1), which early-terminates after cap+1 rows
     instead of a full scan of the upstream lineage per call."""
     spark = embeddings.sparkSession
-    if dim is None:
-        head = embeddings.select(vec_col).first()
-        if head is None:  # empty corpus: empty pair set, correct schema
-            return spark.createDataFrame([], "id_a long, id_b long")
-        dim = len(head[0])
+    head = embeddings.select("embedding").first()
+    if head is None:  # empty corpus: empty pair set, correct schema
+        return spark.createDataFrame([], "id_a long, id_b long")
+    dim = len(head[0])
     cap = _broadcast_row_cap(dim, driver_budget_bytes)
     # gate + collect fused into ONE job: pull at most cap+1 rows; if the
     # corpus fit, this IS the exact path's matrix (the old shape paid a
     # separate limit().count() scan and then re-collected everything).
     # Over the cap the collected prefix is discarded — bounded by the
     # same driver byte budget the exact path would spend anyway.
-    pdf = embeddings.select(id_col, vec_col).limit(cap + 1).toPandas()
+    pdf = embeddings.select("vec_id", "embedding").limit(cap + 1).toPandas()
     if len(pdf) > cap:
-        return lsh_dup_pairs(
-            embeddings, threshold, id_col, vec_col, cfg=cfg, dim=dim
-        )
+        return lsh_dup_pairs(embeddings, threshold, dim=dim)
     bc = spark.sparkContext.broadcast(
-        (pdf[id_col].to_numpy(), _unit_rows(pdf[vec_col]))
+        (pdf["vec_id"].to_numpy(), _unit_rows(pdf["embedding"]))
     )
 
     def find(batches):
@@ -332,9 +318,9 @@ def cosine_dup_pairs(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            a_mat = _unit_rows(pdf[vec_col])
+            a_mat = _unit_rows(pdf["embedding"])
             sims32 = a_mat.astype(np.float32) @ mat_b32.T
-            a_ids = pdf[id_col].to_numpy()
+            a_ids = pdf["vec_id"].to_numpy()
             ii, jj = np.nonzero(sims32 >= threshold - margin)
             if len(ii):
                 exact = np.einsum("ij,ij->i", a_mat[ii], mat_b[jj])
@@ -349,6 +335,6 @@ def cosine_dup_pairs(
 
     # the block-matmul is O(rows_in_partition x corpus): a single-partition
     # scan (few-MB parquet) serializes the whole N^2 work on one core
-    return spread_small(embeddings.select(id_col, vec_col)).mapInPandas(
+    return spread_small(embeddings.select("vec_id", "embedding")).mapInPandas(
         find, "id_a long, id_b long"
     )

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from refine_spark import synth
@@ -179,6 +180,12 @@ def test_checkpoint_resume(spark, tmp_path):
     n2 = r2["clusters"].count()
     assert n1 == n2
     assert any(m["extra"] == "resumed" for m in r2["metrics"])
+
+    # a misspelled or empty pass list fails before any Spark job, rather
+    # than an IndexError after the work or a silently partial clustering
+    for bad in [("txt",), ("exact", "txt"), ()]:
+        with pytest.raises(ValueError, match="passes"):
+            run_dedup(spark, docs, checkpoint_dir=ck, passes=bad)
 
 
 def test_simhash_edges_hot_bucket_exact(spark):

@@ -11,7 +11,9 @@ import re
 
 from hypothesis import given, settings, strategies as st
 
-from refine_spark.config import DEFAULT
+from refine_spark.config import (
+    DEFAULT, NUM_PERM, PENALTY_EXP_FEW, PENALTY_EXP_MANY, SHINGLE_K, SIMHASH_BITS,
+)
 from refine_spark.scoring import _rare_token_sim, _sorensen_dice
 from refine_spark.signatures import _perm_params, _shingle_hashes60, normalize_for_shingles
 
@@ -69,7 +71,7 @@ def test_minhash_jaccard_estimate_within_bounds(words, n_edits):
     b_tokens = list(words)
     for i in range(min(n_edits, len(b_tokens))):
         b_tokens[i] = b_tokens[i] * 2
-    k = DEFAULT.shingle_k
+    k = SHINGLE_K
     sa = set(
         " ".join(a_tokens[i : i + k]) for i in range(max(1, len(a_tokens) - k + 1))
     )
@@ -87,7 +89,7 @@ def test_minhash_jaccard_estimate_within_bounds(words, n_edits):
         return vals.min(axis=1)
 
     est = float((sig(a_tokens) == sig(b_tokens)).mean())
-    sigma = (true_j * (1 - true_j) / DEFAULT.num_perm) ** 0.5
+    sigma = (true_j * (1 - true_j) / NUM_PERM) ** 0.5
     assert abs(est - true_j) <= max(4 * sigma, 0.08)
 
 
@@ -140,7 +142,7 @@ def test_rare_jvm_matches_python_reference(spark):
         rows.append((i, ta, wa, sum(wa), len(ta), tb, wb, sum(wb), len(tb)))
         want.append(
             _rare_token_sim(
-                ta, wa, tb, wb, DEFAULT.penalty_exp_few, DEFAULT.penalty_exp_many
+                ta, wa, tb, wb, PENALTY_EXP_FEW, PENALTY_EXP_MANY
             )
         )
     df = spark.createDataFrame(
@@ -150,7 +152,7 @@ def test_rare_jvm_matches_python_reference(spark):
     )
     got = {
         r["i"]: r["rare"]
-        for r in df.select("i", _rare_jvm(DEFAULT).alias("rare")).collect()
+        for r in df.select("i", _rare_jvm().alias("rare")).collect()
     }
     assert any(x == 0.0 for x in want) and any(x == 1.0 for x in want)
     assert max(abs(got[i] - want[i]) for i in range(len(want))) <= 1e-12
@@ -170,7 +172,6 @@ def test_simhash_model_parity(texts):
     (same md5-low-60 + weighted majority vote)."""
     import hashlib
 
-    from refine_spark.config import DEFAULT as CFG
     from refine_spark.signatures import (
         _shingle_strings, normalize_for_shingles, token_hash60,
     )
@@ -178,14 +179,14 @@ def test_simhash_model_parity(texts):
     def model(text):
         from collections import Counter
 
-        feats = Counter(_shingle_strings(normalize_for_shingles(text), CFG.shingle_k))
-        acc = [0] * CFG.simhash_bits
+        feats = Counter(_shingle_strings(normalize_for_shingles(text), SHINGLE_K))
+        acc = [0] * SIMHASH_BITS
         for s, cnt in feats.items():
             hv = token_hash60(s)
-            for b in range(CFG.simhash_bits):
+            for b in range(SIMHASH_BITS):
                 acc[b] += cnt if (hv >> b) & 1 else -cnt
         out = 0
-        for b in range(CFG.simhash_bits):
+        for b in range(SIMHASH_BITS):
             if acc[b] > 0:
                 out |= 1 << b
         return out
@@ -197,13 +198,13 @@ def test_simhash_model_parity(texts):
     import numpy as np
 
     for text in texts:
-        feats = sig._shingle_strings(sig.normalize_for_shingles(text), CFG.shingle_k)
+        feats = sig._shingle_strings(sig.normalize_for_shingles(text), SHINGLE_K)
         uniq, counts = np.unique(np.array(feats, dtype=object), return_counts=True)
         hs = np.array([sig.token_hash60(s) for s in uniq], dtype=np.uint64)
-        bit_matrix = (hs[:, None] >> np.arange(CFG.simhash_bits, dtype=np.uint64)[None, :]) & 1
+        bit_matrix = (hs[:, None] >> np.arange(SIMHASH_BITS, dtype=np.uint64)[None, :]) & 1
         acc = ((bit_matrix.astype(np.int64) * 2 - 1) * counts.astype(np.int64)[:, None]).sum(axis=0)
         got = 0
-        for b in range(CFG.simhash_bits):
+        for b in range(SIMHASH_BITS):
             if acc[b] > 0:
                 got |= 1 << b
         assert got == model(text)
