@@ -140,11 +140,7 @@ def test_rare_jvm_matches_python_reference(spark):
             tb = sorted(rng.sample(range(12), rng.randint(1, 6)))
         wa, wb = [w[t] for t in ta], [w[t] for t in tb]
         rows.append((i, ta, wa, sum(wa), len(ta), tb, wb, sum(wb), len(tb)))
-        want.append(
-            _rare_token_sim(
-                ta, wa, tb, wb, PENALTY_EXP_FEW, PENALTY_EXP_MANY
-            )
-        )
+        want.append(_rare_token_sim(ta, wa, tb, wb, PENALTY_EXP_FEW, PENALTY_EXP_MANY))
     df = spark.createDataFrame(
         rows,
         "i int, tids_a array<long>, ws_a array<double>, wsum_a double, ntok_a int,"
