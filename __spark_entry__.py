@@ -270,7 +270,9 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # the planted partition exactly (no missed links, no false merges).
         _ensure_workers_can_import(spark)
         docs, _ = synth.to_spark(spark, n_docs=500)
-        signed = with_signatures(docs.select("url", "text"))
+        # materialize the signatures once: banding and both verify joins
+        # read them, and unmaterialized each would re-run the signature UDF
+        signed = with_signatures(docs.select("url", "text")).localCheckpoint(eager=True)
         from refine_spark.pipeline import minhash_edges
 
         edges = minhash_edges(signed)

@@ -21,6 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from .checkpoint import _sized_checkpoint
 from .config import DEFAULT, LSH_BANDS, LSH_ROWS, DedupConfig
 
 
@@ -129,31 +130,6 @@ def bucket_cap_stats(keyed: DataFrame, key_cols: list[str], cap: int) -> DataFra
     )
 
 
-def count_and_est_bytes(
-    df: DataFrame, per_row_overhead: int = 48
-) -> tuple[int, int]:
-    """Row count + estimated materialized byte size of `df`, in ONE Spark
-    job (a single agg — no separate limit().collect() sampling pass).
-
-    String/binary columns cost their exact average length; every other
-    column a fixed 8 bytes (the int64 id hot path; arrays never flow
-    through the frames gated here). Driver fast paths and broadcast
-    hints must gate on BYTES, not rows — 2M edges of ~134-char urls
-    serialize past 1 GB long before any row cap (CLAUDE.md)."""
-    width = F.lit(0)
-    for c, t in df.dtypes:
-        if t in ("string", "binary"):
-            width = width + F.coalesce(F.length(F.col(c)), F.lit(0))
-        else:
-            width = width + F.lit(8)
-    row = df.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.coalesce(F.avg(width), F.lit(0.0)).alias("w"),
-    ).first()
-    n = int(row["n"])
-    return n, int((row["w"] + per_row_overhead) * n)
-
-
 def materialize_pairs(
     pairs: DataFrame,
     broadcast_max_rows: int = 4_000_000,
@@ -173,15 +149,15 @@ def materialize_pairs(
     The hint is withheld above EITHER cap: the row cap (pairs scale with
     corpus at 10^12 docs) or the byte cap — on the int64 doc_id hot path
     4M pairs are ~128 MB, but standalone callers pair url strings, where
-    the same 4M rows exceed 1 GB collected (driver.maxResultSize); both
-    estimates come from the same single-job agg as the count. Above the
-    caps the join stays sort-merge — the distributed path.
+    the same 4M rows exceed 1 GB collected (driver.maxResultSize). Both
+    sizes are observed inside the checkpoint job itself
+    (checkpoint._sized_checkpoint), so gating costs no extra Spark job.
+    Above the caps the join stays sort-merge — the distributed path.
     Returns (frame, n_pairs)."""
-    pairs = pairs.localCheckpoint(eager=True)
     # 16-byte per-row overhead: the broadcast relation's compact row
     # framing, not the fatter driver-collect Row overhead (that gate
     # lives in cluster.py with the default 48)
-    n, est = count_and_est_bytes(pairs, per_row_overhead=16)
+    pairs, n, est = _sized_checkpoint(pairs, per_row_overhead=16)
     hint = n <= broadcast_max_rows and est <= broadcast_max_bytes
     return (F.broadcast(pairs) if hint else pairs), n
 

@@ -16,7 +16,51 @@ import os
 import time
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
+
+
+def _observe_size(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """`df` with its row count and average row width observed: the
+    metrics fill in when the first action over the returned frame runs,
+    inside that same job — no separate sizing agg.
+
+    String/binary columns cost their exact length; every other column a
+    fixed 8 bytes (the int64 id hot path; arrays never flow through the
+    frames gated here). Driver fast paths and broadcast hints must gate
+    on BYTES, not rows — 2M edges of ~134-char urls serialize past 1 GB
+    long before any row cap (CLAUDE.md)."""
+    width = F.lit(0)
+    for c, t in df.dtypes:
+        if t in ("string", "binary"):
+            width = width + F.coalesce(F.length(F.col(c)), F.lit(0))
+        else:
+            width = width + F.lit(8)
+    obs = Observation()
+    observed = df.observe(
+        obs,
+        F.count(F.lit(1)).alias("n"),
+        F.coalesce(F.avg(width), F.lit(0.0)).alias("w"),
+    )
+    return observed, obs
+
+
+def _observed_size(obs: Observation, per_row_overhead: int = 48) -> tuple[int, int]:
+    """(rows, estimated materialized bytes) from a fired `_observe_size`."""
+    m = obs.get
+    n = int(m["n"])
+    return n, int((m["w"] + per_row_overhead) * n)
+
+
+def _sized_checkpoint(
+    df: DataFrame, per_row_overhead: int = 48
+) -> tuple[DataFrame, int, int]:
+    """Eagerly localCheckpoint `df` and size it in the same job:
+    (checkpointed frame, rows, estimated bytes). Gate on the sizes, then
+    read the returned frame — never size and then collect the same
+    unmaterialized lineage, which runs it twice."""
+    observed, obs = _observe_size(df)
+    out = observed.localCheckpoint(eager=True)
+    return (out, *_observed_size(obs, per_row_overhead))
 
 
 @dataclass
@@ -42,9 +86,10 @@ class StageRunner:
     def run(self, stage: str, build, reused: bool = False) -> DataFrame:
         """Materialize `build()` under `stage`, or resume from checkpoint.
 
-        With no checkpoint root the stage still runs and records metrics
-        (row counts force evaluation, keeping stage boundaries real) —
-        unless lazy mode is on and the stage isn't `reused`.
+        With no checkpoint root the stage still materializes and records
+        metrics, keeping stage boundaries real — unless lazy mode is on and
+        the stage isn't `reused`. Either way the row count is observed
+        inside the job that writes or checkpoints the stage.
         """
         t0 = time.monotonic()
         if self._complete(stage):
@@ -56,8 +101,11 @@ class StageRunner:
             return df
         df = build()
         if self.root is not None:
-            df.write.mode("overwrite").parquet(self._path(stage))
+            # the row count rides on the write job; no re-read count
+            observed, obs = _observe_size(df)
+            observed.write.mode("overwrite").parquet(self._path(stage))
             out = self.spark.read.parquet(self._path(stage))
+            rows, _ = _observed_size(obs)
         elif self.lazy and not reused:
             self.metrics.append(
                 {"stage": stage, "rows": -1, "partitions": -1,
@@ -67,8 +115,7 @@ class StageRunner:
         else:
             # no persistent checkpoint: still cut lineage eagerly so later
             # stages never recompute this one (each stage runs exactly once)
-            out = df.localCheckpoint(eager=True)
-        rows = out.count()
+            out, rows, _ = _sized_checkpoint(df)
         self.metrics.append(
             {"stage": stage, "rows": rows, "partitions": out.rdd.getNumPartitions(),
              "wall_sec": round(time.monotonic() - t0, 3), "extra": None}

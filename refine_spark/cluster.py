@@ -22,7 +22,7 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 
-from .candidates import count_and_est_bytes
+from .checkpoint import _sized_checkpoint
 
 
 def _numpy_min_label(src: np.ndarray, dst: np.ndarray):
@@ -79,17 +79,6 @@ _DRIVER_MAX_BYTES = 768 * 1024 * 1024
 _SALT_BUCKETS = 16
 
 
-def _fits_driver(
-    edges: DataFrame,
-    max_rows: int = _DRIVER_MAX_ROWS,
-    max_bytes: int = _DRIVER_MAX_BYTES,
-) -> bool:
-    """Whether `edges` is small enough to collect to the driver. One job:
-    row count and byte estimate fused into a single agg."""
-    n_edges, est_bytes = count_and_est_bytes(edges)
-    return n_edges <= max_rows and est_bytes <= max_bytes
-
-
 def connected_components(
     edges: DataFrame,
     id_col: str = "url",
@@ -99,19 +88,24 @@ def connected_components(
     """Label each vertex of the undirected edge set (src, dst) with the
     minimum vertex id reachable from it. Returns (id, cluster_id).
 
-    Adaptive strategy: edge sets under `driver_cutover` collect to the
-    driver for an O(E a(E)) union-find (near-dup edges are sparse; the
-    distributed loop's fixed per-iteration latency would dominate).
+    Adaptive strategy: edge sets under `driver_cutover` rows and
+    `driver_max_bytes` collect to the driver for an O(E a(E)) union-find
+    (near-dup edges are sparse; the distributed loop's fixed
+    per-iteration latency would dominate).
     Larger sets run iterative min-label propagation — one join + one
     salted aggregation per round, checkpointed to cut lineage — which is
     the 10^12-scale path. It runs until no label changes: labels only
     decrease, so it always terminates, and duplicate-cluster diameters
     are small, so it converges in a few rounds.
     """
-    dedup = edges.select("src", "dst").dropDuplicates(["src", "dst"])
-    if _fits_driver(dedup, driver_cutover, driver_max_bytes):
-        spark = edges.sparkSession
-        return _driver_union_find(dedup.toPandas(), id_col, spark)
+    # sized in the job that materializes it: the driver path collects the
+    # checkpoint and the distributed path starts from it, so the edge
+    # lineage never runs a second time
+    dedup, n_edges, est_bytes = _sized_checkpoint(
+        edges.select("src", "dst").dropDuplicates(["src", "dst"])
+    )
+    if n_edges <= driver_cutover and est_bytes <= driver_max_bytes:
+        return _driver_union_find(dedup.toPandas(), id_col, dedup.sparkSession)
 
     sym = dedup.select(
         F.col("src").alias("a"), F.col("dst").alias("b")
@@ -256,17 +250,21 @@ def name_pass_clusters(
     fixed latency dwarfs the work at accepted-edge volumes; above it, the
     full DataFrame path runs.
     """
-    collected = name_edges.select("src", "dst", "sim")
-    if _fits_driver(collected):
-        return _name_pass_driver(collected, named, id_col)
+    # one job materializes and sizes the edges; both paths read that
+    # checkpoint
+    edges, n_edges, est_bytes = _sized_checkpoint(name_edges.select("src", "dst", "sim"))
+    if n_edges <= _DRIVER_MAX_ROWS and est_bytes <= _DRIVER_MAX_BYTES:
+        return _name_pass_driver(edges, named, id_col)
 
-    labels = connected_components(name_edges, id_col=id_col)
+    labels = connected_components(edges, id_col=id_col)
     seq = sequential_cluster_ids(labels, named, id_col)
     kept_labels = labels.join(seq, "cluster_id", "left_anti")
-    stats = cluster_stats(name_edges, kept_labels, id_col)
+    stats = cluster_stats(edges, kept_labels, id_col)
     clusters = kept_labels.join(stats, "cluster_id").filter(F.col("cluster_size") > 1)
     lab_src = kept_labels.select(F.col(id_col).alias("src"))
-    surviving = name_edges.join(lab_src, "src", "left_semi")
+    surviving = edges.join(lab_src, "src", "left_semi").withColumn(
+        "pass_name", F.lit("name")
+    )
     return clusters, surviving
 
 

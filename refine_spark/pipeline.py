@@ -83,14 +83,16 @@ def minhash_edges(
     )
 
 
-def _log_cap_stats(runner: StageRunner, stage: str, stats_df: DataFrame) -> None:
-    """Record band-cap drop accounting as a metrics row (verdict item:
-    a silent cap at scale must not read as full coverage). Skipped in
-    lazy/bench mode — the accounting is a stage-shaped extra pass."""
+def _log_cap_stats(runner: StageRunner, stage: str, build) -> None:
+    """Record band-cap drop accounting, the one-row frame `build()`
+    returns, as a metrics row (verdict item: a silent cap at scale must
+    not read as full coverage). Skipped in lazy/bench mode — the
+    accounting is a stage-shaped extra pass, so not even its plan is
+    built there."""
     if runner.lazy:
         return
     t0 = time.monotonic()
-    row = stats_df.collect()[0]
+    row = build().collect()[0]
     runner.metrics.append(
         {
             "stage": stage,
@@ -213,7 +215,7 @@ def run_dedup(
             _log_cap_stats(
                 runner,
                 "text_edges_cap",
-                bucket_cap_stats(
+                lambda: bucket_cap_stats(
                     lsh_band_keys(signed, id_col="doc_id"),
                     ["band", "band_key"], cfg.band_cap,
                 ),
@@ -230,7 +232,7 @@ def run_dedup(
             _log_cap_stats(
                 runner,
                 "simhash_edges_cap",
-                bucket_cap_stats(
+                lambda: bucket_cap_stats(
                     simhash_band_keys(_simhash_reps(signed, "doc_id"), id_col="doc_id"),
                     ["band", "band_key"], cfg.band_cap,
                 ),
@@ -257,7 +259,7 @@ def run_dedup(
         _log_cap_stats(
             runner,
             "substring_edges_cap",
-            bucket_cap_stats(
+            lambda: bucket_cap_stats(
                 winnow_fingerprints(base, cfg, id_col="doc_id"),
                 ["fp"], cfg.band_cap,
             ),

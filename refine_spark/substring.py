@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .config import DedupConfig, DEFAULT
 from .candidates import _pairs_from_buckets, materialize_pairs
+from .checkpoint import _observe_size, _observed_size
 
 _B = np.uint64(1000003)  # polynomial rolling-hash base (wraparound mod 2^64)
 _B_INV = np.uint64(pow(int(_B), -1, 1 << 64))  # B is odd -> invertible mod 2^64
@@ -115,10 +116,14 @@ def substring_edges(
     # materialize the winnowing output once: _pairs_from_buckets reads its
     # input from three subplans (size count, cold anti-join, hot semi-join)
     # and exchange reuse is not guaranteed under AQE — without this the
-    # CPU-heavy mapInPandas winnowing stage can run per subplan
-    fps = winnow_fingerprints(docs, cfg, id_col=id_col).localCheckpoint(eager=True)
-    pairs = _pairs_from_buckets(fps, id_col, ["fp"], cfg.band_cap)
+    # CPU-heavy mapInPandas winnowing stage can run per subplan. That job
+    # reads every text anyway, so it also sizes them for the
+    # broadcast-vs-shuffle attach below (no separate sizing pass).
     texts = docs.select(id_col, "text")
+    observed, text_size = _observe_size(texts)
+    fps = winnow_fingerprints(observed, cfg, id_col=id_col).localCheckpoint(eager=True)
+    _, txt_bytes = _observed_size(text_size)
+    pairs = _pairs_from_buckets(fps, id_col, ["fp"], cfg.band_cap)
     a = texts.select(F.col(id_col).alias("src"), F.col("text").alias("text_a"))
     b = texts.select(F.col(id_col).alias("dst"), F.col("text").alias("text_b"))
     # candidate pairs are byte-small, so AQE coalesces them to ~1 partition
@@ -131,9 +136,6 @@ def substring_edges(
     # ~640 MB of attached text through the exchange at sf1.0.
     parallelism = docs.sparkSession.sparkContext.defaultParallelism
     pairs = pairs.localCheckpoint(eager=True)  # feeds both join plans once
-    from .candidates import count_and_est_bytes
-
-    _, txt_bytes = count_and_est_bytes(texts)
     if txt_bytes <= 256 * 1024 * 1024:
         joined = (
             pairs.repartition(parallelism)

@@ -317,18 +317,19 @@ def test_pair_broadcast_byte_gate(spark):
     grant it on the byte-small int64 hot path (round-5 ADVICE fix)."""
     from pyspark.sql import functions as F
 
-    from refine_spark.candidates import count_and_est_bytes, materialize_pairs
+    from refine_spark.candidates import materialize_pairs
+    from refine_spark.checkpoint import _sized_checkpoint
 
     def has_hint(df) -> bool:
         return "ResolvedHint" in df._jdf.queryExecution().analyzed().toString()
 
-    # count_and_est_bytes: exact-width strings + 8-byte ints, one job
+    # _sized_checkpoint: exact-width strings + 8-byte ints, one job
     wide = spark.range(100).select(
         F.rpad(F.lit("u"), 50, "x").alias("src"),
         F.rpad(F.lit("v"), 50, "x").alias("dst"),
         F.col("id").alias("k"),
     )
-    n, est = count_and_est_bytes(wide, per_row_overhead=16)
+    _, n, est = _sized_checkpoint(wide, per_row_overhead=16)
     assert n == 100
     assert est == (50 + 50 + 8 + 16) * 100
 

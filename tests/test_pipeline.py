@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
@@ -372,3 +373,65 @@ def test_minhash_verify_join_broadcasts_pairs(spark):
     assert n_fat == 10 and n_slim == 10
     assert "hint" not in fat._jdf.queryExecution().logical().toString().lower()
     assert "hint" in slim._jdf.queryExecution().logical().toString().lower()
+
+
+def test_gated_lineage_runs_once(spark):
+    """A size gate rides on the job that materializes the frame it gates:
+    the lineage feeding connected_components' driver path and
+    materialize_pairs evaluates once. A separate sizing job, or a gate
+    followed by a collect of the same unmaterialized lineage, runs the
+    counting UDF below a second time."""
+    from refine_spark.candidates import materialize_pairs
+    from refine_spark.cluster import connected_components
+
+    def counting_identity(acc):
+        @F.pandas_udf("long")
+        def ident(s: pd.Series) -> pd.Series:
+            acc.add(len(s))
+            return s
+
+        return ident
+
+    sc = spark.sparkContext
+    cc_rows = sc.accumulator(0)
+    edges = spark.range(300).select(
+        counting_identity(cc_rows)(F.col("id")).alias("src"),
+        (F.col("id") + 1000).alias("dst"),
+    )
+    labels = connected_components(edges, id_col="v")  # 300 edges: driver path
+    assert cc_rows.value == 300
+    assert labels.count() == 600
+
+    pair_rows = sc.accumulator(0)
+    pairs = spark.range(300).select(
+        counting_identity(pair_rows)(F.col("id")).alias("src"),
+        (F.col("id") + 1).alias("dst"),
+    )
+    frame, n = materialize_pairs(pairs)
+    assert n == 300 and frame.count() == 300
+    assert pair_rows.value == 300
+
+
+def test_sized_checkpoint_and_stage_rows(spark, tmp_path):
+    """_sized_checkpoint sizes an empty frame as (0 rows, 0 bytes) with
+    its schema intact, and a StageRunner metrics row reports the stage's
+    true row count in the lazy reused path and the checkpoint-dir path,
+    both observed inside the job that materializes the stage."""
+    from refine_spark.checkpoint import StageRunner, _sized_checkpoint
+
+    empty = spark.createDataFrame([], "src bigint, dst bigint")
+    frame, n, est = _sized_checkpoint(empty)
+    assert (n, est) == (0, 0)
+    assert frame.dtypes == [("src", "bigint"), ("dst", "bigint")]
+    assert len(frame.toPandas()) == 0
+
+    df = spark.range(100).filter(F.col("id") % 3 == 0).select(
+        F.col("id").alias("k"), F.lit("x").alias("s")
+    )
+    expected = df.count()
+    lazy = StageRunner(spark, lazy=True)
+    lazy.run("reused", lambda: df, reused=True)
+    ckpt = StageRunner(spark, str(tmp_path / "ckpt"))
+    ckpt.run("written", lambda: df)
+    assert lazy.metrics[0]["rows"] == expected == 34
+    assert ckpt.metrics[0]["rows"] == expected
