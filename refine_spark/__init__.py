@@ -9,6 +9,7 @@ DataFrames for clustering, and LSH-band self-joins for candidate generation.
 Package map (SURVEY.md §7.1):
     config.py       fixed algorithm constants (reference parity)
     session.py      SparkSession factory tuned for local[N] testing
+    worker_daemon.py  Python worker daemon: per-task zip re-reads skipped
     schema.py       declared StructTypes per pipeline stage
     synth.py        deterministic synthetic Common-Crawl-style documents
     scan.py         source load + fetch filters + filename/collection grammar

@@ -4,7 +4,9 @@ Local-mode testing defaults that still express the cluster-scale intent:
 AQE on (runtime re-plan, skew-join splitting), Arrow on (pandas UDF path),
 shuffle partitions sized to cores (not the 200 default).  On a real
 cluster the same conf applies, with shuffle partitions scaled to the
-executor count by the submitter.
+executor count by the submitter.  Python workers fork from
+`refine_spark.worker_daemon`, which stops each task from re-reading every
+zip archive on the worker's import path.
 """
 
 from __future__ import annotations
@@ -47,6 +49,7 @@ def get_spark(
         SparkSession.builder.master(master)
         .appName(app_name)
         .config("spark.executorEnv.PYTHONPATH", worker_pp)
+        .config("spark.python.daemon.module", "refine_spark.worker_daemon")
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
