@@ -71,13 +71,6 @@ def quality_stats(text: Column) -> dict[str, Column]:
     }
 
 
-def with_quality(df: DataFrame, text_col: str = "text") -> DataFrame:
-    out = df
-    for name, col in quality_stats(F.col(text_col)).items():
-        out = out.withColumn(name, col)
-    return out
-
-
 def doc_fingerprint(text: Column) -> Column:
     """Stable content fingerprint of normalized text: md5 over lowercased,
     whitespace-collapsed text. md5 (not xxhash64) so DuckDB reproduces it

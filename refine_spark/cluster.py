@@ -72,7 +72,7 @@ def _driver_union_find(edges_pdf: pd.DataFrame, id_col: str, spark):
     return spark.createDataFrame(out)
 
 
-# driver fast-path cutover shared by both CC entry points
+# connected_components' driver fast-path cutover
 _DRIVER_MAX_ROWS = 2_000_000
 _DRIVER_MAX_BYTES = 768 * 1024 * 1024
 # salt fan-out of the distributed min-label reduce (hub-vertex skew)
@@ -89,9 +89,10 @@ def connected_components(
     minimum vertex id reachable from it. Returns (id, cluster_id).
 
     Adaptive strategy: edge sets under `driver_cutover` rows and
-    `driver_max_bytes` collect to the driver for an O(E a(E)) union-find
-    (near-dup edges are sparse; the distributed loop's fixed
-    per-iteration latency would dominate).
+    `driver_max_bytes` collect to the driver for the vectorized
+    hook-and-compress labelling of _numpy_min_label (near-dup edges are
+    sparse; the distributed loop's fixed per-iteration latency would
+    dominate).
     Larger sets run iterative min-label propagation — one join + one
     salted aggregation per round, checkpointed to cut lineage — which is
     the 10^12-scale path. It runs until no label changes: labels only
@@ -225,7 +226,9 @@ def sequential_cluster_ids(
     # cluster_id inherits the vertex-id type (string urls or int64 doc_ids)
     cid_type = dict(labels.dtypes)["cluster_id"]
 
-    def detect(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    # unannotated: partial hints make PySpark warn that it cannot infer
+    # the eval type on every applyInPandas call
+    def detect(key, pdf):
         seq = is_likely_sequential(pdf["cleaned_name"].tolist())
         return pd.DataFrame({"cluster_id": [key[0]], "sequential": [seq]})
 
@@ -240,98 +243,18 @@ def name_pass_clusters(
 ) -> tuple[DataFrame, DataFrame]:
     """Reference 'similar pass' output: (clusters, surviving_edges).
 
-    Clusters with >1 member, sequential groups removed, with avg_sim;
-    surviving_edges excludes edges inside sequential clusters so the
-    global CC never links through an excluded group.
-
-    Adaptive like connected_components: below the cutover the whole chain
-    (union-find, sequential detection, stats, edge filtering) runs on the
-    driver in pandas — the distributed version is ~10 small jobs whose
-    fixed latency dwarfs the work at accepted-edge volumes; above it, the
-    full DataFrame path runs.
+    clusters are the (id, cluster_id) labels of the name clusters left
+    after sequential groups are removed; surviving_edges excludes edges
+    inside sequential clusters so the global CC never links through an
+    excluded group. connected_components picks the driver or distributed
+    labelling from the edge-set size.
     """
-    # one job materializes and sizes the edges; both paths read that
-    # checkpoint
-    edges, n_edges, est_bytes = _sized_checkpoint(name_edges.select("src", "dst", "sim"))
-    if n_edges <= _DRIVER_MAX_ROWS and est_bytes <= _DRIVER_MAX_BYTES:
-        return _name_pass_driver(edges, named, id_col)
-
-    labels = connected_components(edges, id_col=id_col)
+    labels = connected_components(name_edges, id_col=id_col)
     seq = sequential_cluster_ids(labels, named, id_col)
-    kept_labels = labels.join(seq, "cluster_id", "left_anti")
-    stats = cluster_stats(edges, kept_labels, id_col)
-    clusters = kept_labels.join(stats, "cluster_id").filter(F.col("cluster_size") > 1)
-    lab_src = kept_labels.select(F.col(id_col).alias("src"))
-    surviving = edges.join(lab_src, "src", "left_semi").withColumn(
-        "pass_name", F.lit("name")
+    kept = labels.join(seq, "cluster_id", "left_anti")
+    surviving = (
+        name_edges.select("src", "dst", "sim")
+        .join(kept.select(F.col(id_col).alias("src")), "src", "left_semi")
+        .withColumn("pass_name", F.lit("name"))
     )
-    return clusters, surviving
-
-
-def _name_pass_driver(name_edges: DataFrame, named: DataFrame, id_col: str):
-    """Driver-side pandas implementation of the similar-pass epilogue over
-    (src, dst, sim) edges. Same semantics as the distributed path; Arrow
-    transfer both ways."""
-    spark = name_edges.sparkSession
-    epdf = name_edges.toPandas()
-    # explicit DDL for zero-row outputs: schema inference over empty
-    # object-dtype pandas columns fails, and on the doc_id path the id
-    # columns must come out bigint, not string
-    id_t = "bigint" if pd.api.types.is_integer_dtype(epdf["src"]) else "string"
-    clusters_ddl = (
-        f"{id_col} {id_t}, cluster_id {id_t}, avg_sim double,"
-        " n_edges long, cluster_size long"
-    )
-    surviving_ddl = f"src {id_t}, dst {id_t}, sim double, pass_name string"
-
-    def frame(pdf: pd.DataFrame, ddl: str) -> DataFrame:
-        if len(pdf):
-            return spark.createDataFrame(pdf)
-        return spark.createDataFrame([], ddl)
-
-    if not len(epdf):
-        # the `touched` frame below would hit the same inference failure
-        return frame(epdf, clusters_ddl), frame(epdf, surviving_ddl)
-    touched = spark.createDataFrame(
-        pd.DataFrame({id_col: pd.unique(epdf[["src", "dst"]].to_numpy().ravel())})
-    )
-    names_pdf = (
-        named.join(touched, id_col, "left_semi")
-        .select(id_col, "cleaned_name")
-        .toPandas()
-    )
-    name_of = dict(zip(names_pdf[id_col], names_pdf["cleaned_name"]))
-
-    # vectorized components + pandas group reductions (the dict loops of
-    # rounds 1-3 were serial seconds at 800k docs — Amdahl drag on the
-    # scaling legs)
-    src_arr, dst_arr = epdf["src"].to_numpy(), epdf["dst"].to_numpy()
-    ids, labels = _numpy_min_label(src_arr, dst_arr)
-    root_of = dict(zip(ids, labels))
-    members_by_root = pd.Series(ids).groupby(pd.Series(labels)).agg(list)
-
-    sequential_roots = {
-        root
-        for root, us in members_by_root.items()
-        if len(us) > 1
-        and is_likely_sequential([name_of.get(u, "") for u in us])
-    }
-    # per-cluster edge stats over accepted edges
-    edge_root = pd.Series(src_arr).map(root_of)
-    grp = epdf["sim"].groupby(edge_root)
-    sums = grp.sum().to_dict()
-    counts = grp.size().to_dict()
-
-    rows = [
-        (u, root, sums.get(root, 0.0) / max(1, counts.get(root, 0)),
-         counts.get(root, 0), len(us))
-        for root, us in members_by_root.items()
-        if root not in sequential_roots and len(us) > 1
-        for u in us
-    ]
-    clusters = pd.DataFrame(
-        rows, columns=[id_col, "cluster_id", "avg_sim", "n_edges", "cluster_size"]
-    )
-    keep_mask = ~edge_root.isin(sequential_roots).to_numpy()
-    surv_pdf = epdf[keep_mask].assign(pass_name="name")
-    return frame(clusters, clusters_ddl), frame(surv_pdf, surviving_ddl)
+    return kept, surviving

@@ -57,9 +57,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
-        # adaptive driver fast paths (CC / name-pass epilogue) collect
-        # edge frames whose BYTE size can exceed the 1g default at the
-        # 2M-edge cutover; the driver has memory to spare
+        # the adaptive CC driver fast path collects edge frames whose
+        # BYTE size can exceed the 1g default at the 2M-edge cutover;
+        # the driver has memory to spare
         .config("spark.driver.maxResultSize", os.environ.get("SPARK_DRIVER_MAX_RESULT", "4g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))

@@ -8,7 +8,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 
 from refine_spark.analysis import (
-    bpe_ish_count, doc_fingerprint, lang_id, token_count, with_quality,
+    bpe_ish_count, doc_fingerprint, lang_id, quality_stats, token_count,
 )
 from refine_spark.simsearch import brute_force_topk, cosine_dup_pairs, lsh_topk
 
@@ -37,7 +37,9 @@ def test_analysis_columns(spark):
     assert counts[0]["bc"] == 10
     assert len(counts[0]["fp"]) == 32  # md5 hex
 
-    q = with_quality(df).collect()[0]
+    q = df.select(
+        *[c.alias(n) for n, c in quality_stats(F.col("text")).items()]
+    ).collect()[0]
     assert q["n_tokens"] == 10 and q["n_punct"] == 0 and q["n_stopwords"] >= 4
 
 

@@ -172,6 +172,44 @@ def test_distributed_cc_matches_driver_path(spark):
     assert labels == {i: 0 for i in range(27)}
 
 
+@pytest.mark.parametrize("distributed_cc", [False, True])
+def test_name_pass_drops_sequential_clusters(spark, monkeypatch, distributed_cc):
+    # planted name edges: a sequential cluster (episodes 1-4), a
+    # duplicate-name cluster and an unrelated pair; only the sequential
+    # cluster's edges may be dropped, on either CC path
+    import functools
+    import warnings
+
+    from refine_spark import cluster
+    from refine_spark.cluster import connected_components, name_pass_clusters
+
+    if distributed_cc:
+        monkeypatch.setattr(
+            cluster, "connected_components",
+            functools.partial(connected_components, driver_cutover=0),
+        )
+    names = {1: "show ep 1", 2: "show ep 2", 3: "show ep 3", 4: "show ep 4",
+             10: "great movie", 11: "great movie", 12: "great movie",
+             20: "holiday photos", 21: "tax return"}
+    named = spark.createDataFrame(list(names.items()), "doc_id long, cleaned_name string")
+    edges = spark.createDataFrame(
+        [(1, 2, 0.9), (2, 3, 0.9), (3, 4, 0.9), (10, 11, 1.0), (11, 12, 1.0),
+         (20, 21, 0.75)],
+        "src long, dst long, sim double",
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        clusters, surviving = name_pass_clusters(edges, named, id_col="doc_id")
+    assert not [w for w in caught if issubclass(w.category, UserWarning)]
+
+    assert sorted(tuple(r) for r in surviving.collect()) == [
+        (10, 11, 1.0, "name"), (11, 12, 1.0, "name"), (20, 21, 0.75, "name"),
+    ]
+    assert {r["doc_id"]: r["cluster_id"] for r in clusters.collect()} == {
+        10: 10, 11: 10, 12: 10, 20: 20, 21: 20,
+    }
+
+
 def test_checkpoint_resume(spark, tmp_path):
     docs, _ = synth.to_spark(spark, n_docs=200)
     ck = str(tmp_path / "ckpt2")
