@@ -8,10 +8,10 @@ combinations -> global dropDuplicates. LSH banding is the same shape with
 key = xxhash64(signature band slice).
 
 Scale notes (explicitly handled, north rule):
-  - pair generation is ONE shuffle (groupBy key) instead of a two-sided
-    self-join; partial aggregation combines map-side.
+  - pair generation is ONE shuffle on the bucket key (window + groupBy)
+    instead of a two-sided self-join.
   - hot keys (stopword-like tokens / degenerate bands) produce B^2 pairs;
-    keys above `cap` are dropped AND counted to a side-channel metric,
+    keys above `cap` are truncated AND counted to a side-channel metric,
     mirroring the reference's stopword removal rationale.
   - the pair stream is deduped on (least, greatest) BEFORE any expensive
     scoring (barrier placement, SURVEY.md §4).
@@ -31,48 +31,33 @@ def _pairs_from_buckets(
     """Group rows by blocking key and emit distinct (src < dst) pairs.
 
     `keyed` must be unique on (key_cols, id_col) — one row per (id, band)
-    explode, np.unique'd winnow fingerprints, array_distinct'd tokens:
-    the bucket-size counts that gate the hot/cold cap split count rows.
+    explode, np.unique'd winnow fingerprints, array_distinct'd tokens: a
+    duplicate row would put its id twice in a bucket and emit (x, x).
 
-    Buckets larger than `cap` are truncated deterministically (the cap
-    SMALLEST ids); bucket_cap_stats over the same frame reports what the
-    truncation drops.
+    Buckets larger than `cap` keep their `cap` SMALLEST ids;
+    bucket_cap_stats over the same frame reports what the cap drops.
+    A window row_number applies the cap BEFORE any aggregation buffer
+    exists (WindowExec spills; agg buffers don't): the
+    collect_set-then-slice of rounds 1-2 exhausted the JVM heap at 800k
+    docs, where skewed buckets reach 10^5 members.
 
-    The cap is enforced BEFORE any unbounded aggregation buffer exists
-    (the collect_set-then-slice of rounds 1-2 built the FULL set per
-    bucket inside the aggregation buffer first — observed JVM heap
-    exhaustion at 800k docs, where 60-bit fingerprints band into a
-    2^15-value key space and skewed buckets reach 10^5 members).
-
-    Hot/cold split: bucket sizes are counted first (tiny count-agg
-    buffers), over-cap keys — rare by construction — are broadcast;
-    cold rows keep the fast hash-agg collect path with buffers bounded
-    at `cap` elements by the size precondition, while only hot-bucket
-    rows pay a window sort (WindowExec spills; hash-agg buffers don't).
-    The common path therefore costs one count-agg + one collect-agg
-    with no global sort."""
+    One shuffle on the bucket key: the collect reuses the window's
+    partitioning. A cap within spark.sql.optimizer.windowGroupLimitThreshold
+    (1000) also gets a map-side WindowGroupLimit, which drops over-cap
+    rows before the shuffle. A hash-agg path for small buckets would save
+    no sort at scale: ObjectHashAggregate turns sort-based once a task
+    sees more than 128 keys (objectHashAggregate.sortBased.fallbackThreshold)."""
     from pyspark.sql import Window as W
 
-    uniq = keyed.select(*key_cols, id_col)
-    sizes = uniq.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("_total"))
-    hot_keys = sizes.filter(F.col("_total") > cap)
-
-    cold = uniq.join(F.broadcast(hot_keys.select(*key_cols)), key_cols, "left_anti")
-    cold_buckets = (
-        cold.groupBy(*key_cols)
-        .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
-        .filter(F.size("ids") > 1)
-    )
-
-    hot = uniq.join(F.broadcast(hot_keys.select(*key_cols)), key_cols, "left_semi")
     w = W.partitionBy(*key_cols).orderBy(id_col)
-    hot_buckets = (
-        hot.withColumn("_rn", F.row_number().over(w))
+    buckets = (
+        keyed.select(*key_cols, id_col)
+        .withColumn("_rn", F.row_number().over(w))
         .filter(F.col("_rn") <= cap)  # the cap SMALLEST ids, pre-aggregation
         .groupBy(*key_cols)
         .agg(F.sort_array(F.collect_list(F.col(id_col))).alias("ids"))
+        .filter(F.size("ids") > 1)
     )
-    buckets = cold_buckets.unionByName(hot_buckets)
     # all i<j combinations, generated JVM-side with higher-order functions
     # (bucket sizes are cap-bounded, so per-row explode cost is bounded;
     # profiling showed an extra repartition here costs more than the

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from .checkpoint import _sized_checkpoint
 
@@ -134,16 +134,17 @@ def connected_components(
         own = labels.select("id", "label", F.col("label").alias("own"))
         candidates = msgs.union(own)
         # two-stage salted min to tame hub-vertex skew
+        changed = Observation()  # counted inside the round's checkpoint job
         new_labels = (
             candidates.withColumn("salt", F.pmod(F.xxhash64("label"), F.lit(_SALT_BUCKETS)))
             .groupBy("id", "salt")
             .agg(F.min("label").alias("label"), F.min("own").alias("own"))
             .groupBy("id")
             .agg(F.min("label").alias("label"), F.min("own").alias("own"))
+            .observe(changed, F.count_if(F.col("label") != F.col("own")).alias("n"))
         ).localCheckpoint(eager=True)
-        changed = new_labels.filter(F.col("label") != F.col("own")).limit(1).count()
         labels = new_labels.select("id", "label")
-        if changed == 0:
+        if changed.get["n"] == 0:
             break
 
     return labels.select(F.col("id").alias(id_col), F.col("label").alias("cluster_id"))
@@ -155,18 +156,20 @@ def cluster_stats(
     """(cluster_id, avg_sim, n_edges, cluster_size) from accepted edges.
 
     avg_sim = sum(sim)/count over every accepted edge in the cluster,
-    matching the reference's union-time (sum, count) accounting.
+    matching the reference's union-time (sum, count) accounting. The sum
+    is exact decimal, so avg_sim does not depend on edge-row order.
     """
     lab = labels.select(F.col(id_col).alias("src"), "cluster_id")
     edge_stats = (
         edges.join(lab, "src")
         .groupBy("cluster_id")
-        .agg(F.sum("sim").alias("sim_sum"), F.count(F.lit(1)).alias("n_edges"))
+        .agg(F.sum(F.col("sim").cast("decimal(38,18)")).alias("sim_sum"),
+             F.count(F.lit(1)).alias("n_edges"))
     )
     sizes = labels.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("cluster_size"))
     return sizes.join(edge_stats, "cluster_id", "left").select(
         "cluster_id",
-        (F.col("sim_sum") / F.col("n_edges")).alias("avg_sim"),
+        (F.col("sim_sum") / F.col("n_edges")).cast("double").alias("avg_sim"),
         F.coalesce("n_edges", F.lit(0)).alias("n_edges"),
         "cluster_size",
     )

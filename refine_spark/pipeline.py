@@ -246,8 +246,12 @@ def run_dedup(
             lambda: name_pass_edges(named, id_col="doc_id"),
             reused=True,  # feeds name CC and the surviving-edge semi-join
         )
-        _, surviving = name_pass_clusters(raw_name_edges, named, id_col="doc_id")
-        edge_frames.append(runner.run("name_edges", lambda: surviving))
+        edge_frames.append(
+            runner.run(
+                "name_edges",
+                lambda: name_pass_clusters(raw_name_edges, named, id_col="doc_id")[1],
+            )
+        )
 
     if "substring" in passes:
         edge_frames.append(
@@ -270,15 +274,15 @@ def run_dedup(
         all_edges = all_edges.unionByName(e)
     all_edges = runner.run("edges", lambda: all_edges, reused=True)
 
-    labels = connected_components(all_edges, id_col="doc_id")
-    stats = cluster_stats(all_edges, labels, id_col="doc_id")
-    with_stats = labels.join(stats, "cluster_id").select(
-        "doc_id", "cluster_id", "avg_sim", F.col("cluster_size").cast("int")
-    )
-    clusters = runner.run(
-        "clusters",
-        lambda: _relabel_by_url(with_stats, ids, ["avg_sim", "cluster_size"]),
-    )
+    def build_clusters() -> DataFrame:
+        labels = connected_components(all_edges, id_col="doc_id")
+        stats = cluster_stats(all_edges, labels, id_col="doc_id")
+        with_stats = labels.join(stats, "cluster_id").select(
+            "doc_id", "cluster_id", "avg_sim", F.col("cluster_size").cast("int")
+        )
+        return _relabel_by_url(with_stats, ids, ["avg_sim", "cluster_size"])
+
+    clusters = runner.run("clusters", build_clusters)
     runner.write_metrics()
     return {
         "base": base,

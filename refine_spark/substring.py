@@ -113,11 +113,9 @@ def substring_edges(
 ) -> DataFrame:
     """Edges (src, dst, sim, 'substring') for pairs sharing a substring of
     length >= cfg.min_substring; sim = lcs_len / min(text lengths)."""
-    # materialize the winnowing output once: _pairs_from_buckets reads its
-    # input from three subplans (size count, cold anti-join, hot semi-join)
-    # and exchange reuse is not guaranteed under AQE — without this the
-    # CPU-heavy mapInPandas winnowing stage can run per subplan. That job
-    # reads every text anyway, so it also sizes them for the
+    # materialize the winnowing output once, so the CPU-heavy mapInPandas
+    # stage runs in exactly one job whatever plan reads the fingerprints.
+    # That job reads every text anyway, so it also sizes them for the
     # broadcast-vs-shuffle attach below (no separate sizing pass).
     texts = docs.select(id_col, "text")
     observed, text_size = _observe_size(texts)

@@ -172,6 +172,27 @@ def test_distributed_cc_matches_driver_path(spark):
     assert labels == {i: 0 for i in range(27)}
 
 
+def test_cluster_stats_avg_sim_is_order_free(spark):
+    # a double sum of 0.1 + 0.2 + 0.3 depends on the order the rows
+    # arrive in (0.20000000000000004 one way, 0.19999999999999998 the
+    # other); avg_sim must not
+    from refine_spark.cluster import cluster_stats
+
+    rows = [("a", "b", 0.1), ("a", "c", 0.2), ("a", "d", 0.3)]
+    labels = spark.createDataFrame(
+        [(u, "a") for u in "abcd"], "url string, cluster_id string"
+    )
+    avgs = []
+    for ordered in (rows, rows[::-1]):
+        edges = spark.createDataFrame(ordered, "src string, dst string, sim double")
+        stats = cluster_stats(edges.coalesce(1), labels).collect()
+        assert [(r["cluster_id"], r["n_edges"], r["cluster_size"]) for r in stats] == [
+            ("a", 3, 4)
+        ]
+        avgs.append(stats[0]["avg_sim"])
+    assert avgs[0] == avgs[1] == 0.2
+
+
 @pytest.mark.parametrize("distributed_cc", [False, True])
 def test_name_pass_drops_sequential_clusters(spark, monkeypatch, distributed_cc):
     # planted name edges: a sequential cluster (episodes 1-4), a
@@ -210,15 +231,28 @@ def test_name_pass_drops_sequential_clusters(spark, monkeypatch, distributed_cc)
     }
 
 
-def test_checkpoint_resume(spark, tmp_path):
+def test_checkpoint_resume(spark, tmp_path, monkeypatch):
+    from refine_spark import cluster, pipeline
+
     docs, _ = synth.to_spark(spark, n_docs=200)
     ck = str(tmp_path / "ckpt2")
-    r1 = run_dedup(spark, docs, checkpoint_dir=ck, passes=("exact",))
-    n1 = r1["clusters"].count()
-    r2 = run_dedup(spark, docs, checkpoint_dir=ck, passes=("exact",))
-    n2 = r2["clusters"].count()
-    assert n1 == n2
-    assert any(m["extra"] == "resumed" for m in r2["metrics"])
+    passes = ("exact", "name")
+    r1 = run_dedup(spark, docs, checkpoint_dir=ck, passes=passes)
+    rows1 = sorted(tuple(r) for r in r1["clusters"].collect())
+
+    # a fully resumed run reads every stage back: neither the name pass
+    # nor the global clustering may label anything again
+    calls = []
+    for mod in (pipeline, cluster):
+        real = mod.connected_components
+        monkeypatch.setattr(
+            mod, "connected_components",
+            lambda *a, _real=real, **k: calls.append(1) or _real(*a, **k),
+        )
+    r2 = run_dedup(spark, docs, checkpoint_dir=ck, passes=passes)
+    assert sorted(tuple(r) for r in r2["clusters"].collect()) == rows1
+    assert calls == []
+    assert all(m["extra"] == "resumed" for m in r2["metrics"])
 
     # a misspelled or empty pass list fails before any Spark job, rather
     # than an IndexError after the work or a silently partial clustering
@@ -300,11 +334,21 @@ def test_cap_stats_metrics_logged(spark):
     assert "capped_buckets=0" in extra and "est_dropped_pairs=0" in extra
 
 
-def test_pairs_from_buckets_cap_contract(spark):
+# None: the session default (1000 in Spark 4.1), above the test cap;
+# -1: no map-side limit, the plan the pipeline's band_cap of 2000 runs
+@pytest.mark.parametrize(
+    "group_limit_threshold", [None, "-1"], ids=["default", "disabled"]
+)
+def test_pairs_from_buckets_cap_contract(spark, group_limit_threshold):
     """The bucket-pair operator on a planted hot bucket of n > cap ids:
     distinct src < dst pairs, the hot bucket reduced to all pairs of its
     cap smallest ids, and bucket_cap_stats reporting the exact shortfall
-    C(n,2) - C(cap,2)."""
+    C(n,2) - C(cap,2). One pass: the plan shuffles on the bucket key and
+    on (src, dst), broadcasts nothing, and drops over-cap rows map-side
+    exactly when the cap is within windowGroupLimitThreshold."""
+    import contextlib
+    import io
+    import re
     from itertools import combinations
 
     from refine_spark.candidates import _pairs_from_buckets, bucket_cap_stats
@@ -317,8 +361,31 @@ def test_pairs_from_buckets_cap_contract(spark):
     rows += [(2, 100), (2, 101), (3, 101), (3, 100), (3, 102), (4, 103)]
     keyed = spark.createDataFrame(rows, "k long, id long")
 
-    pairs = _pairs_from_buckets(keyed, "id", ["k"], cap)
-    out = [(r["src"], r["dst"]) for r in pairs.collect()]
+    key = "spark.sql.optimizer.windowGroupLimitThreshold"
+    before = spark.conf.get(key, None)
+    if group_limit_threshold is not None:
+        spark.conf.set(key, group_limit_threshold)
+    try:
+        pairs = _pairs_from_buckets(keyed, "id", ["k"], cap)
+        buf = io.StringIO()
+        with contextlib.redirect_stdout(buf):
+            pairs.explain()
+        out = [(r["src"], r["dst"]) for r in pairs.collect()]
+    finally:
+        if before is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, before)
+    plan = buf.getvalue()
+    assert "BroadcastExchange" not in plan
+    exchanges = [
+        re.sub(r"#\d+L?", "", keys)
+        for keys in re.findall(r"\bExchange hashpartitioning\((.*?), \d+\)", plan)
+    ]
+    assert exchanges == ["src, dst", "k"]
+    assert len(re.findall(r"\bExchange\b", plan)) == 2
+    assert ("WindowGroupLimit" in plan) == (group_limit_threshold is None)
+
     assert len(out) == len(set(out))
     assert all(s < d for s, d in out)
     want_hot = set(combinations(sorted(hot)[:cap], 2))
