@@ -313,7 +313,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     q["simhash_hamming_pairs"] = simhash_hamming_pairs
 
     def substring_pairs(spark, sf):
-        # winnowing fingerprints -> bucket join -> EXACT LCS verify; the
+        # winnowing fingerprints -> bucket join -> exact LCS verify; the
         # winnowing guarantee (w + n - 1 <= min_substring) makes this
         # exactly the set of pairs sharing a >=48-char substring, which
         # the oracle recomputes first-principles (grid q-gram prefilter +
@@ -324,10 +324,7 @@ def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
         # 188k to ~8k at sf0.1 and the hot-bucket pathology disappears
         # (SCALE.md round-2 item; re-included in the bench wall).
         docs = _docs_as_pipeline_input(_read(spark, sf, "documents"))
-        cfg = DedupConfig(
-            min_substring=48, winnow_ngram=24, winnow_window=25,
-            exact_lcs_verify=True,
-        )
+        cfg = DedupConfig(min_substring=48, winnow_ngram=24, winnow_window=25)
         return substring_edges(docs, cfg).select("src", "dst")
 
     q["substring_pairs"] = substring_pairs

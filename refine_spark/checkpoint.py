@@ -18,6 +18,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
+_STAGE_METRICS = "_metrics.json"  # a complete stage's metrics row, beside _SUCCESS
+
 
 def _observe_size(df: DataFrame) -> tuple[DataFrame, Observation]:
     """`df` with its row count and average row width observed: the
@@ -79,12 +81,14 @@ class StageRunner:
         return os.path.join(self.root, stage)
 
     def _complete(self, stage: str) -> bool:
-        return self.root is not None and os.path.exists(
-            os.path.join(self._path(stage), "_SUCCESS")
+        return self.root is not None and all(
+            os.path.exists(os.path.join(self._path(stage), f))
+            for f in ("_SUCCESS", _STAGE_METRICS)
         )
 
     def run(self, stage: str, build, reused: bool = False) -> DataFrame:
-        """Materialize `build()` under `stage`, or resume from checkpoint.
+        """Materialize `build()` under `stage`, or resume a stage directory
+        that holds both Spark's `_SUCCESS` and the stage's metrics row.
 
         With no checkpoint root the stage still materializes and records
         metrics, keeping stage boundaries real — unless lazy mode is on and
@@ -93,11 +97,11 @@ class StageRunner:
         """
         t0 = time.monotonic()
         if self._complete(stage):
+            # the row the writing run recorded: resuming runs no count job
+            with open(os.path.join(self._path(stage), _STAGE_METRICS)) as fh:
+                row = {**json.load(fh), "extra": "resumed"}
             df = self.spark.read.parquet(self._path(stage))
-            self.metrics.append(
-                {"stage": stage, "rows": df.count(), "partitions": df.rdd.getNumPartitions(),
-                 "wall_sec": round(time.monotonic() - t0, 3), "extra": "resumed"}
-            )
+            self.metrics.append({**row, "wall_sec": round(time.monotonic() - t0, 3)})
             return df
         df = build()
         if self.root is not None:
@@ -116,10 +120,15 @@ class StageRunner:
             # no persistent checkpoint: still cut lineage eagerly so later
             # stages never recompute this one (each stage runs exactly once)
             out, rows, _ = _sized_checkpoint(df)
-        self.metrics.append(
-            {"stage": stage, "rows": rows, "partitions": out.rdd.getNumPartitions(),
-             "wall_sec": round(time.monotonic() - t0, 3), "extra": None}
-        )
+        row = {"stage": stage, "rows": rows, "partitions": out.rdd.getNumPartitions(),
+               "wall_sec": round(time.monotonic() - t0, 3), "extra": None}
+        self.metrics.append(row)
+        if self.root is not None:
+            # written last, atomically: only a stage with its row resumes
+            tmp = os.path.join(self._path(stage), "_metrics.tmp")
+            with open(tmp, "w") as fh:
+                json.dump(row, fh)
+            os.replace(tmp, os.path.join(self._path(stage), _STAGE_METRICS))
         return out
 
     def write_metrics(self) -> None:

@@ -3,6 +3,10 @@ and the few settings a caller varies.
 
 The constants are module constants, not `DedupConfig` fields: no caller
 varies them, and the DuckDB oracles replay the MinHash/SimHash geometry.
+`DedupConfig` holds the five values a caller varies: `min_substring`, its
+winnowing split (`winnow_ngram`, `winnow_window`: a free knob, since the
+exact verifier makes the edges depend on `min_substring` only), `band_cap`
+and `seed`.
 Reference cites (constants carried verbatim, see BASELINE.md):
   - sample size 4 KB, three-point: /root/reference/src/commands/dupes.rs:30-31,460-501
   - similarity threshold 0.7 clamped: dupes.rs:33-34,64-72
@@ -52,12 +56,6 @@ class DedupConfig:
     # window chosen so any shared substring >= min_substring guarantees a
     # shared fingerprint: w + n - 1 <= min_substring
     winnow_window: int = 193
-    # verify shared-substring candidates with an exact O(n*m)
-    # SequenceMatcher instead of the rolling-hash run estimate. The
-    # estimate has no false negatives (a true shared substring always
-    # produces the full run of n-gram hits) and negligible false positives
-    # (64-bit hashes over 64-char grams); exact verify is for audits.
-    exact_lcs_verify: bool = False
 
     # --- skew knob ---
     band_cap: int = 2000            # max rows per LSH band key before capping (logged)

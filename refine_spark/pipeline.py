@@ -8,7 +8,7 @@ Stages:
              estimated Jaccard verification (JVM-side)       -> edges
   name       inverted-token blocking -> lev/dice/rare scoring
              -> name CC -> sequential-group filter           -> edges
-  substring  winnowing fingerprints -> shared-run verification -> edges
+  substring  winnowing fingerprints -> exact LCS verification -> edges
   cluster    global connected components over all edges + avg-sim stats
 
 Every inter-stage boundary can checkpoint via StageRunner (resume +

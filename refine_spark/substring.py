@@ -9,10 +9,9 @@ Aiken, "Winnowing: Local Algorithms for Document Fingerprinting", SIGMOD'03):
      (w = winnow_window). Guarantee: any substring shared by two documents
      of length >= w + n - 1 (= min_substring) yields a shared fingerprint.
   2. explode fingerprints -> bucket pairs (same machinery as LSH banding)
-  3. verify candidates per pair (pandas UDF) and emit edges when the
-     shared substring reaches min_substring: by default the rolling-hash
-     run estimate, or an exact longest-common-substring check with
-     `exact_lcs_verify`.
+  3. verify candidates per pair (pandas UDF) with the exact longest
+     common substring (`_longest_shared`) and emit an edge when it
+     reaches min_substring, sim = its length / the shorter text.
 
 Step 1 is mapInPandas (numpy sliding windows, Arrow batches); steps 2-3 are
 one shuffle + one verify join.
@@ -21,7 +20,6 @@ one shuffle + one verify join.
 from __future__ import annotations
 
 from collections.abc import Iterator
-from difflib import SequenceMatcher
 
 import numpy as np
 import pandas as pd
@@ -33,15 +31,15 @@ from .checkpoint import _observe_size, _observed_size
 
 _B = np.uint64(1000003)  # polynomial rolling-hash base (wraparound mod 2^64)
 _B_INV = np.uint64(pow(int(_B), -1, 1 << 64))  # B is odd -> invertible mod 2^64
+# texts up to this many bytes are broadcast to the verify join; above it
+# the pair side is broadcast and the joined rows shuffled once
+_BROADCAST_TEXT_MAX_BYTES = 256 * 1024 * 1024
 
 
-def _rolling_hashes(text: str, n: int) -> np.ndarray:
-    """uint64-wraparound polynomial hashes of every char n-gram.
-
-    O(len) via the modular-inverse prefix trick (round 3; the previous
-    sliding_window_view matmul did O(len x n) multiply-adds — 64x the
-    memory traffic at the production n=64, and the dominant bandwidth
-    load of the substring stage at wide parallelism):
+def _window_hashes(data: np.ndarray, n: int) -> np.ndarray:
+    """uint64-wraparound polynomial hashes of every length-n window of
+    the integer sequence `data` (bytes or code points), in O(len) via
+    the modular-inverse prefix trick:
 
         h[i] = sum_j data[i+j] * B^(n-1-j)            (mod 2^64)
              = B^(n-1+i) * (P[i+n] - P[i]),  P = prefix-sum of data[j]*B^-j
@@ -49,36 +47,81 @@ def _rolling_hashes(text: str, n: int) -> np.ndarray:
     All cumprod/cumsum/diff arithmetic wraps mod 2^64 in uint64, so the
     values are bit-identical to the direct polynomial (pinned by
     test_rolling_hash_vectorization_exact)."""
-    data = np.frombuffer(text.encode("utf-8", "ignore"), dtype=np.uint8)
     length = len(data)
     if length < n:
         return np.array([], dtype=np.uint64)
-    m = length - n + 1
-    binv_pows = np.empty(length, dtype=np.uint64)
+    binv_pows = np.full(length, _B_INV)
     binv_pows[0] = 1
-    if length > 1:
-        binv_pows[1:] = _B_INV
-        np.cumprod(binv_pows, out=binv_pows)
-    t = data.astype(np.uint64) * binv_pows
-    prefix = np.empty(length + 1, dtype=np.uint64)
-    prefix[0] = 0
-    np.cumsum(t, out=prefix[1:])
-    diff = prefix[n:] - prefix[:-n]
-    bpow = np.empty(m, dtype=np.uint64)
+    np.cumprod(binv_pows, out=binv_pows)
+    prefix = np.zeros(length + 1, dtype=np.uint64)
+    np.cumsum(data.astype(np.uint64) * binv_pows, out=prefix[1:])
+    bpow = np.full(length - n + 1, _B)
     bpow[0] = pow(int(_B), n - 1, 1 << 64)
-    if m > 1:
-        bpow[1:] = _B
-        np.cumprod(bpow, out=bpow)
-    return diff * bpow
+    np.cumprod(bpow, out=bpow)
+    return (prefix[n:] - prefix[:-n]) * bpow
+
+
+def _longest_shared(x: str, y: str, min_len: int, cache: dict | None = None) -> int:
+    """Length in code points of the longest common substring of x and
+    y, or 0 when it is shorter than `min_len`.
+
+    A common substring of length L >= min_len puts L - min_len + 1
+    consecutive min_len-windows of x among y's windows, so it lies in the
+    span of one maximal run of x-windows whose hash occurs in y. A span
+    bounds what its run can share: `str.__contains__` confirms it, and
+    only a span that is not shared (two pieces of x that meet in y, or a
+    hash collision) is binary-searched. Every length returned is checked
+    on the strings, so a hash collision costs time, never exactness."""
+    shorter = min(len(x), len(y))
+    if shorter < min_len:
+        return 0
+    # identical / containment pairs (the bulk: exact dups share everything)
+    if x in y or y in x:
+        return shorter
+    # (code points, window hashes, sorted hashes) once per text and cache
+    # (one batch, one min_len): a text meets several partners
+    cache = {} if cache is None else cache
+    for text in (x, y):
+        if text not in cache:
+            cp = np.frombuffer(text.encode("utf-32-le", "surrogatepass"), dtype=np.uint32)
+            h = _window_hashes(cp, min_len)
+            cache[text] = (cp, h, np.sort(h))
+    (cx, hx, _), (cy, _, hy_sorted) = cache[x], cache[y]
+    idx = np.minimum(np.searchsorted(hy_sorted, hx), len(hy_sorted) - 1)
+    hit = np.concatenate(([False], hy_sorted[idx] == hx, [False]))
+    bounds = np.flatnonzero(hit[1:] != hit[:-1])
+    starts, spans = bounds[::2], bounds[1::2] - bounds[::2] + min_len - 1
+
+    def shared(start: int, span: int, length: int) -> bool:
+        # does a length-`length` piece of x[start:start+span] occur in y?
+        # hashes pick the candidates, the strings decide
+        hits = np.isin(_window_hashes(cx[start:start + span], length), _window_hashes(cy, length))
+        return any(x[start + i:start + i + length] in y for i in np.flatnonzero(hits))
+
+    best = 0
+    for i in np.argsort(-spans, kind="stable"):
+        start, span = int(starts[i]), int(spans[i])
+        if span <= best:
+            break
+        if x[start:start + span] in y:
+            return span  # runs come longest first: no later span is longer
+        # neither text contains the other, so the answer is < shorter
+        lo, hi = max(best + 1, min_len), min(span, shorter) - 1
+        while lo <= hi:
+            mid = (lo + hi) // 2
+            if shared(start, span, mid):
+                best, lo = mid, mid + 1
+            else:
+                hi = mid - 1
+    return best
 
 
 def _fingerprints(text: str, n: int, w: int) -> np.ndarray:
-    hashes = _rolling_hashes(text, n)
+    """Winnowed hashes of the UTF-8 byte n-grams of `text`."""
+    hashes = _window_hashes(np.frombuffer(text.encode("utf-8", "ignore"), dtype=np.uint8), n)
     if len(hashes) == 0:
         return np.array([], dtype=np.int64)
-    if len(hashes) <= w:
-        return np.unique(hashes.min(keepdims=True)).view(np.int64)
-    mins = np.lib.stride_tricks.sliding_window_view(hashes, w).min(axis=1)
+    mins = np.lib.stride_tricks.sliding_window_view(hashes, min(w, len(hashes))).min(axis=1)
     return np.unique(mins).view(np.int64)
 
 
@@ -105,7 +148,7 @@ def winnow_fingerprints(
                 fps.extend(f.tolist())
             yield pd.DataFrame({id_col: ids, "fp": pd.array(fps, dtype="int64")})
 
-    return docs.select(id_col, "text").mapInPandas(gen, f"{id_col} {id_type}, fp long")
+    return docs.mapInPandas(gen, f"{id_col} {id_type}, fp long")
 
 
 def substring_edges(
@@ -124,19 +167,17 @@ def substring_edges(
     pairs = _pairs_from_buckets(fps, id_col, ["fp"], cfg.band_cap)
     a = texts.select(F.col(id_col).alias("src"), F.col("text").alias("text_a"))
     b = texts.select(F.col(id_col).alias("dst"), F.col("text").alias("text_b"))
-    # candidate pairs are byte-small, so AQE coalesces them to ~1 partition
-    # — which would serialize the CPU-heavy LCS verify. Spread across the
-    # cluster with an explicit repartition (never coalesced by AQE) —
-    # placed BEFORE the text attach when the text table is small enough
-    # to broadcast, so the fat joined rows (pair x two full texts, ~100x
-    # the pair bytes) are never shuffled at all; the measured r5 shape
-    # (broadcast pairs -> stream texts -> repartition joined) moved
-    # ~640 MB of attached text through the exchange at sf1.0.
+    # AQE coalesces the byte-small pairs to ~1 partition, which would
+    # serialize the verify UDF: repartition explicitly (never coalesced),
+    # before the text attach when the texts broadcast, so the fat joined
+    # rows are never shuffled (the r5 shape moved ~640 MB at sf1.0).
     parallelism = docs.sparkSession.sparkContext.defaultParallelism
-    pairs = pairs.localCheckpoint(eager=True)  # feeds both join plans once
-    if txt_bytes <= 256 * 1024 * 1024:
+    if txt_bytes <= _BROADCAST_TEXT_MAX_BYTES:
+        # the verify stage starts from the compact checkpointed pair
+        # table, not from a replan of the bucket-pair lineage
         joined = (
-            pairs.repartition(parallelism)
+            pairs.localCheckpoint(eager=True)
+            .repartition(parallelism)
             .join(F.broadcast(a), "src")
             .join(F.broadcast(b), "dst")
         )
@@ -147,67 +188,15 @@ def substring_edges(
         joined = pairs.join(a, "src").join(b, "dst").repartition(parallelism)
 
     min_len = cfg.min_substring
-    n = cfg.winnow_ngram
-    exact_verify = cfg.exact_lcs_verify
-
-    def _hashes_cached(cache: dict, text: str) -> tuple[np.ndarray, np.ndarray]:
-        """(hashes, sorted_hashes) per text, computed once per batch —
-        np.isin would re-sort the needle side on EVERY pair; caching the
-        sorted array lets each pair pay only a searchsorted."""
-        h = cache.get(text)
-        if h is None:
-            raw = _rolling_hashes(text, n)
-            h = (raw, np.sort(raw))
-            cache[text] = h
-        return h
 
     @F.pandas_udf("double")
     def lcs_ratio(ta: pd.Series, tb: pd.Series) -> pd.Series:
+        cache: dict = {}  # per batch: a text meets several partners
         out = []
-        cache: dict[str, np.ndarray] = {}
-        need_run = min_len - n + 1
         for x, y in zip(ta, tb):
-            x = x or ""
-            y = y or ""
-            if not x or not y:
-                out.append(0.0)
-                continue
-            shorter = min(len(x), len(y))
-            # tier 0: identical / containment pairs (the bulk — exact dups
-            # trivially share every substring) — O(n)
-            if x == y or (shorter >= min_len and (x in y or y in x)):
-                out.append(1.0 if shorter >= min_len else 0.0)
-                continue
-            # tier 1: vectorized necessary condition — a shared substring
-            # of length >= min_len forces a run of >= min_len - n + 1
-            # consecutive positions in x whose n-gram hash also occurs in
-            # y. O(len log len) with numpy; filters the vast majority.
-            ha, _ = _hashes_cached(cache, x)
-            _, hb_sorted = _hashes_cached(cache, y)
-            if len(ha) == 0 or len(hb_sorted) == 0:
-                out.append(0.0)
-                continue
-            idx = np.searchsorted(hb_sorted, ha)
-            idx[idx == len(hb_sorted)] = 0
-            common = hb_sorted[idx] == ha
-            # longest run of True
-            padded = np.concatenate(([0], common.view(np.int8), [0]))
-            diff = np.diff(padded)
-            starts = np.nonzero(diff == 1)[0]
-            ends = np.nonzero(diff == -1)[0]
-            longest = int((ends - starts).max()) if len(starts) else 0
-            if longest < need_run:
-                out.append(0.0)
-                continue
-            if not exact_verify:
-                # hash-run estimate: shared region ~= run + n - 1
-                out.append(min(1.0, (longest + n - 1) / max(1, shorter)))
-                continue
-            # tier 2 (audit mode): exact LCS for the survivors
-            m = SequenceMatcher(None, x, y, autojunk=False).find_longest_match(
-                0, len(x), 0, len(y)
-            )
-            out.append(m.size / max(1, shorter) if m.size >= min_len else 0.0)
+            x, y = x or "", y or ""
+            shared = _longest_shared(x, y, min_len, cache)
+            out.append(shared / min(len(x), len(y)) if shared else 0.0)
         return pd.Series(out, dtype="float64")
 
     verified = joined.withColumn("sim", lcs_ratio(F.col("text_a"), F.col("text_b")))

@@ -61,14 +61,21 @@ def test_traced_spans_resolve(monkeypatch):
 
 
 def test_library_reads_every_parameter():
-    """Every parameter of every library `def` is read in its body: a
-    parameter nothing reads is a setting that silently does nothing.
-    Lambdas are exempt — a callback's arity is fixed by its caller."""
+    """Every parameter of every library `def` is read in its body, and
+    every DedupConfig field is read somewhere in the library: a
+    parameter or field nothing reads is a setting that silently does
+    nothing. Lambdas are exempt — a callback's arity is fixed by its
+    caller."""
     import ast
+    import dataclasses
 
-    unread = []
+    from refine_spark.config import DedupConfig
+
+    unread, attrs = [], set()
     for path in sorted((REPO / "refine_spark").glob("*.py")):
         for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if isinstance(node, ast.Attribute) and isinstance(node.ctx, ast.Load):
+                attrs.add(node.attr)
             if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
                 continue
             a = node.args
@@ -84,4 +91,10 @@ def test_library_reads_every_parameter():
                 for p in params
                 if p is not None and p.arg not in read
             ]
+    unread += [
+        f"DedupConfig.{f.name}"
+        for f in dataclasses.fields(DedupConfig)
+        if f.name not in attrs
+    ]
     assert not unread, f"parameters never read: {unread}"
+

@@ -540,3 +540,108 @@ def test_sized_checkpoint_and_stage_rows(spark, tmp_path):
     ckpt.run("written", lambda: df)
     assert lazy.metrics[0]["rows"] == expected == 34
     assert ckpt.metrics[0]["rows"] == expected
+
+
+def _substring_edge_set(docs, cfg=None):
+    from refine_spark.config import DEFAULT
+    from refine_spark.substring import substring_edges
+
+    return {
+        (r["src"], r["dst"], r["sim"])
+        for r in substring_edges(docs, cfg or DEFAULT).collect()
+    }
+
+
+def test_substring_edges_need_one_shared_piece(spark):
+    """Two 250-char pieces of x that overlap by 64 chars inside y put
+    every 64-gram of x's 436-char stretch into y, yet the longest shared
+    substring is 250 < min_substring=256: no edge at the default
+    geometry. A hash-run estimate over n-grams found anywhere in y
+    emitted this pair."""
+    import random
+
+    rng = random.Random(17)
+
+    def letters(k):
+        return "".join(rng.choice("abcdefghijklmnopqrstuvwxyz ") for _ in range(k))
+
+    stretch = letters(436)
+    x = letters(200) + stretch + letters(100)
+    y = stretch[:250] + "#" * 50 + stretch[186:]
+    docs = spark.createDataFrame([("doc://x", x), ("doc://y", y)], "url string, text string")
+    assert _substring_edge_set(docs) == set()
+
+
+def test_substring_edges_free_of_winnow_split(spark):
+    """The edges depend only on min_substring: every (n, w) split with
+    n + w - 1 == 48 gives the same (src, dst, sim) set, sim included,
+    because the verifier measures the exact shared length."""
+    from refine_spark.config import DedupConfig
+    from refine_spark.pipeline import prepare
+
+    docs, _ = synth.to_spark(spark, n_docs=300)
+    texts = prepare(docs).select("url", "text").localCheckpoint()
+    got = [
+        _substring_edge_set(
+            texts, DedupConfig(min_substring=48, winnow_ngram=n, winnow_window=w)
+        )
+        for n, w in [(16, 33), (24, 25), (32, 17)]
+    ]
+    assert got[0] and got[0] == got[1] == got[2]
+
+
+def test_substring_edges_corpus_scale_branch(spark, monkeypatch):
+    """Above the text byte gate, the pair side is broadcast and the
+    joined rows shuffled once; both branches give the same edges."""
+    from refine_spark import substring
+    from refine_spark.pipeline import prepare
+
+    docs, _ = synth.to_spark(spark, n_docs=200)
+    texts = prepare(docs).select("url", "text").localCheckpoint()
+    small = _substring_edge_set(texts)
+    monkeypatch.setattr(substring, "_BROADCAST_TEXT_MAX_BYTES", -1)
+    assert small and _substring_edge_set(texts) == small
+
+
+def test_resume_runs_no_count_job(spark, tmp_path):
+    """A resumed stage takes its metrics row from the _metrics.json the
+    writing run left beside _SUCCESS, so resuming runs no count job:
+    beyond the work before the first stage, a resumed stage costs at
+    most its parquet read. A stage directory without the row is
+    recomputed."""
+    import os
+
+    from refine_spark.pipeline import prepare, verify_doc_ids
+
+    sc = spark.sparkContext
+
+    def jobs(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            out = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    docs, _ = synth.to_spark(spark, n_docs=300)
+    ck = str(tmp_path / "ckpt")
+    passes = ("exact", "name")
+    r1 = run_dedup(spark, docs, checkpoint_dir=ck, passes=passes)
+    rows1 = sorted(tuple(r) for r in r1["clusters"].collect())
+
+    r2, n_resume = jobs("resume", lambda: run_dedup(spark, docs, checkpoint_dir=ck, passes=passes))
+    assert sorted(tuple(r) for r in r2["clusters"].collect()) == rows1
+    resumed = [m["stage"] for m in r2["metrics"] if m["extra"] == "resumed"]
+    assert len(resumed) == len(r2["metrics"]) == 5
+    assert [m["rows"] for m in r2["metrics"]] == [m["rows"] for m in r1["metrics"]]
+    _, n_fixed = jobs("fixed", lambda: verify_doc_ids(prepare(docs).localCheckpoint()))
+    _, n_reads = jobs(
+        "reads", lambda: [spark.read.parquet(os.path.join(ck, s)) for s in resumed]
+    )
+    assert n_resume <= n_fixed + n_reads, (n_resume, n_fixed, n_reads)
+
+    os.remove(os.path.join(ck, "name_edges", "_metrics.json"))
+    r3 = run_dedup(spark, docs, checkpoint_dir=ck, passes=passes)
+    by_stage = {m["stage"]: m["extra"] for m in r3["metrics"]}
+    assert by_stage["name_edges"] is None and by_stage["exact_edges"] == "resumed"
+    assert sorted(tuple(r) for r in r3["clusters"].collect()) == rows1

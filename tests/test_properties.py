@@ -303,10 +303,10 @@ def test_rolling_hash_vectorization_exact(text, n):
     the direct O(len*n) polynomial (mod 2^64)."""
     import numpy as np
 
-    from refine_spark.substring import _B, _rolling_hashes
+    from refine_spark.substring import _B, _window_hashes
 
-    got = _rolling_hashes(text, n)
     data = np.frombuffer(text.encode("utf-8", "ignore"), dtype=np.uint8)
+    got = _window_hashes(data, n)
     if len(data) < n:
         assert len(got) == 0
         return
@@ -315,3 +315,41 @@ def test_rolling_hash_vectorization_exact(text, n):
     win = np.lib.stride_tricks.sliding_window_view(data, n).astype(np.uint64)
     exp = (win * w[None, :]).sum(axis=1, dtype=np.uint64)
     assert np.array_equal(got, exp)
+
+
+_lcs_text = st.text(alphabet=st.sampled_from("ab é"), min_size=0, max_size=200)
+
+
+@given(_lcs_text, _lcs_text, st.integers(min_value=1, max_value=64))
+@settings(max_examples=300, deadline=None)
+def test_longest_shared_matches_difflib(x, y, min_len):
+    """The substring verifier is exact: its length equals difflib's
+    longest matching block (no junk heuristic), in code points, and is
+    0 below min_len. A low alphabet makes long runs and repeats common,
+    and the non-ASCII letter keeps code points apart from UTF-8 bytes."""
+    from difflib import SequenceMatcher
+
+    from refine_spark.substring import _longest_shared
+
+    ref = SequenceMatcher(None, x, y, autojunk=False).find_longest_match(
+        0, len(x), 0, len(y)
+    ).size
+    assert _longest_shared(x, y, min_len) == (ref if ref >= min_len else 0)
+
+
+def test_longest_shared_long_runs_and_cache():
+    """A long unshared run (thousands of spaces on both sides) resolves
+    by binary search inside the run, and a shared per-batch cache gives
+    the same lengths as a fresh one."""
+    from refine_spark.substring import _longest_shared
+
+    cache: dict = {}
+    pairs = [
+        (" " * 5000 + "a", "b" + " " * 3000 + "b", 48, 3000),
+        ("xé" + " " * 300, " " * 299 + "é", 48, 299),
+        ("abc" * 100, "abc" * 100, 48, 300),
+        ("abc" * 100, "zabc" * 20, 48, 0),
+    ]
+    for x, y, min_len, want in pairs + pairs:
+        assert _longest_shared(x, y, min_len, cache) == want
+        assert _longest_shared(y, x, min_len) == want
